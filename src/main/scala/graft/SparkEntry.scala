@@ -101,14 +101,13 @@ object SparkEntry {
     "q_hashed_features" -> ((s, dir) => TextAnalysis.hashedFeatures(s, dir)),
     // BPE merge candidates: freq-weighted adjacent-char pair counts
     "q_bpe_pairs" -> ((s, dir) => TextAnalysis.bpePairCounts(s, dir)),
-    // the full BPE merge LOOP (k rounds of count→merge-top-pair→recount
-    // over the cached vocabulary — corpus scanned once)
+    // the full BPE merge LOOP (k rounds of count→merge-top-pair→recount;
+    // corpus scanned once, merges on the collected vocabulary). The
+    // _batched and _local names stay in the query list and run the same
+    // single trainer
     "q_bpe_merges" -> ((s, dir) => TextAnalysis.bpeMerges(s, dir)),
-    // the BATCHED merge loop (R provably-independent merges per round
-    // pair-of-jobs — the real-vocab-size path) against the SAME
-    // sequential k-unrolled oracle: batched ≡ one-at-a-time, engine-checked
-    "q_bpe_merges_batched" -> ((s, dir) => TextAnalysis.bpeMergesBatched(s, dir)),
-    "q_bpe_merges_local" -> ((s, dir) => TextAnalysis.bpeMergesLocal(s, dir)),
+    "q_bpe_merges_batched" -> ((s, dir) => TextAnalysis.bpeMerges(s, dir)),
+    "q_bpe_merges_local" -> ((s, dir) => TextAnalysis.bpeMerges(s, dir)),
     // the trained tokenizer applied back: per-doc BPE token counts,
     // distinct words segmented once (vocab-factored encode)
     "q_bpe_encode" -> ((s, dir) => TextAnalysis.bpeEncodeCounts(s, dir)),

@@ -1219,277 +1219,79 @@ FROM pairs GROUP BY a, b
 ORDER BY cnt DESC, a, b LIMIT $topN
 """.trim
 
-  /** Symbol separator for the BPE merge loop's wrapped-string word
+  /** Symbol separator of the BPE oracles' wrapped-string word
     * representation: U+001F (unit separator), a control character that
-    * never occurs in natural text. Words containing it are excluded in
-    * BOTH engines, so the oracle stays exact even if one ever appears. */
+    * never occurs in natural text. Words containing it are left out of
+    * the BPE vocabulary in BOTH engines, so the oracle stays exact even if
+    * one ever appears. */
   val BpeSep = "\u001F"
+
+  /** The BPE vocabulary of a documents relation (needs a `text` column):
+    * whitespace tokens of at least two codepoints that do not carry
+    * [[BpeSep]], one row per distinct word with its corpus frequency
+    * `freq`. Training and encoding both read it, so they agree on what a
+    * word is; every other whitespace token encodes as one token. */
+  private def bpeVocabulary(documents: DataFrame): DataFrame =
+    documents
+      .select(explode(split(coalesce(col("text"), lit("")), " ", -1)).as("w"))
+      .filter(length(col("w")) >= 2 && !col("w").contains(BpeSep))
+      .groupBy("w").agg(count(lit(1)).as("freq"))
 
   /** BPE merge-loop TRAINING (Sennrich et al. 2016, arXiv:1508.07909) —
     * [[bpePairCounts]] grown from one iteration's statistic into the real
     * tokenizer-training op: k rounds of (count adjacent symbol pairs,
     * merge the most frequent, recount). Output is the learned merge table
-    * (it, a, b, cnt) with the deterministic tie-break (cnt DESC, a, b).
+    * (it, a, b, cnt) with the deterministic tie-break (cnt DESC, a, b);
+    * training stops early once no pair is left.
     *
-    * Scale shape: the corpus is scanned ONCE (word-frequency aggregate);
-    * every merge round then runs against the cached vocabulary-sized word
-    * table — at 100 TB the corpus scan is the only heavy job and k rounds
-    * cost k small jobs over the vocabulary. The per-round top-1 collect is
-    * the adjudicated model read (1 row/round — the merge table IS the
-    * model being trained, like Lloyd's centroid loop).
-    *
-    * Representation: each word's symbol sequence is one string with every
-    * symbol wrapped in [[BpeSep]] (`abc` → `␟a␟␟b␟␟c␟`). Merging pair
-    * (a,b) is then a literal `replace(ws, ␟a␟␟b␟, ␟ab␟)` — and because a
-    * match always ends exactly at a token boundary, string-level
-    * left-to-right non-overlapping replacement is EXACTLY token-level BPE
-    * merge semantics ([a,b,a,b] → [ab,ab]), in Spark and DuckDB alike —
-    * which is what keeps the k-round oracle ([[bpeMergesSql]]) total.
-    * Character indexing is codepoint-based in both engines. */
-  def bpeMerges(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
-    bpeMergesOn(docs(spark, dir), k)
-
-  def bpeMergesOn(documents: DataFrame, k: Int = 8): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val words = documents
-      .select(explode(split(coalesce(col("text"), lit("")), " ", -1)).as("w"))
-      .filter(length(col("w")) >= 2 && !col("w").contains(BpeSep))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-    // ONE action per round: the top-1 collect materializes the current
-    // round's LAZY-checkpointed ws as a side effect, after which the
-    // previous round's blocks can go — merge rounds never rescan the
-    // corpus and never pay a second job. Rounds chain through
-    // lazyLocalCheckpoint, NOT cache(): a cached chain keeps the full
-    // logical lineage and the optimized plan DOUBLES per round (measured
-    // in BpeProbe: OOM by round ~20), while the checkpoint keeps plan and
-    // RDD DAG O(1) per round — the property that makes 30k-merge
-    // tokenizer training a flat sequence of vocabulary-sized jobs.
-    val shim = org.apache.spark.sql.graft.CheckpointShim
-    var ws = shim.lazyLocalCheckpoint(words.select(
-      regexp_replace(col("w"), "(?s)(.)", BpeSep + "$1" + BpeSep).as("ws"),
-      col("freq")))
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var round = 1
-    var exhausted = false
-    while (round <= k && !exhausted) {
-      val top = bpePairCountsOf(ws)
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(1).collect()
-      if (prev != null) { shim.freeCheckpoint(prev); prev = null }
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((round, a, b, c))
-        prev = ws
-        ws = shim.lazyLocalCheckpoint(ws.select(
-          replace(col("ws"), lit(BpeSep + a + BpeSep + BpeSep + b + BpeSep),
-            lit(BpeSep + a + b + BpeSep)).as("ws"),
-          col("freq")))
-        round += 1
-      }
-    }
-    shim.freeCheckpoint(ws)
-    if (prev != null) shim.freeCheckpoint(prev)
-    merges.toSeq.toDF("it", "a", "b", "cnt").orderBy("it")
-  }
-
-  /** BATCHED BPE training — [[bpeMerges]] semantics at real vocab sizes.
-    *
-    * The sequential loop pays one driver-synchronized job per merge round
-    * (~0.25 s floor ⇒ hours at a real tokenizer's 30k merges). This
-    * variant accepts R ≥ 1 merges per round pair-of-jobs, PROVABLY equal
-    * to one-at-a-time semantics; where the proof fails it falls back to
-    * accepting fewer (worst case 1 — the sequential loop's behavior).
-    *
-    * Per batch round, over the cached vocabulary relation:
-    *  - job A: exact pair counts → top-`lookahead` candidates (cnt, a, b);
-    *  - job B: for each candidate (a,b), the max frequency-weighted count
-    *    of adjacent triples (p,a,b) / (a,b,q) — an UPPER bound on the
-    *    count of any pair a merge of (a,b) can CREATE ((p,ab) occurrences
-    *    are a subset of (p,a,b) triples; overlap consumption only lowers
-    *    them).
-    * The driver then accepts the longest candidate prefix c₁..cₘ under
-    * [[acceptBatchPrefix]]'s rule: each cᵢ (i > 1)
-    *  1. shares NO symbol with c₁..cᵢ₋₁ AND no symbol (nor its own
-    *     concatenation) equals an earlier accepted merge's concatenation
-    *     xa+xb — a candidate touching an about-to-be-created token
-    *     carries a stale job-A count, and two decompositions of the same
-    *     token string would pool counts (advisor r9); and
-    *  2. has cnt STRICTLY above every accepted candidate's created-pair
-    *     bound — so no pair created by c₁..cᵢ₋₁ can outrank cᵢ in the
-    *     sequential order (ties break conservatively: stop);
-    * and the batch STOPS after any accepted merge whose result string
-    * xa+xb was EVER a corpus symbol — pre-existing (p, xa+xb) pairs would
-    * pool with created ones and invalidate the created-pair bound. The
-    * symbol ledger is driver-side (initial distinct symbols — one tiny
-    * job — plus every accepted concatenation), a conservative SUPERSET of
-    * live symbols: a stale entry can only shorten a batch, never admit an
-    * unsound one. (A 200k-corpus brute-force search over adversarial
-    * {a,b,c} vocabularies found NO reachable collision state under these
-    * greedy replace-all semantics, so the ledger stop is defensive — but
-    * soundness here is unconditional, not an empirical claim.)
-    *
-    * Accepted merges apply as ONE chained-replace job (textually identical
-    * to sequential application). Equality with [[bpeMerges]] is pinned by
-    * BpeBatchedSpec's differentials (incl. adversarial created-pair,
-    * shared-symbol and collision-ledger corpora) and by
-    * `q_bpe_merges_batched`, which runs against the SAME k-unrolled
-    * sequential DuckDB oracle.
-    *
-    * Scale shape: rounds/s improves by the mean accepted-prefix length
-    * (measured in SCALING.md's BPE section); the corpus is still scanned
-    * once, and all per-round work stays vocabulary-sized. */
-  def bpeMergesBatched(spark: SparkSession, dir: String, k: Int = 8,
-                       lookahead: Int = 16): DataFrame =
-    bpeMergesBatchedOn(docs(spark, dir), k, lookahead)
-
-  def bpeMergesBatchedOn(documents: DataFrame, k: Int = 8,
-                         lookahead: Int = 16): DataFrame =
-    bpeMergesBatchedWithStats(documents, k, lookahead)._1
-
-  /** The driver-side acceptance decision of [[bpeMergesBatchedOn]] —
-    * pure, unit-testable (BpeBatchedSpec drives it directly with ledger
-    * states the replace loop cannot reach). `top` is job A's candidate
-    * prefix in sequential tie-break order; `bounds` job B's created-pair
-    * upper bounds; `everSym` the symbol ledger. Returns the accepted
-    * prefix. */
-  private[graft] def acceptBatchPrefix(
-      top: Seq[(String, String, Long)],
-      bounds: Map[(String, String), Long],
-      everSym: String => Boolean): Seq[(String, String, Long)] = {
-    val accepted = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    var stop = false
-    for (c <- top if !stop) {
-      val (a, b, cnt) = c
-      val ok = accepted.isEmpty || (
-        accepted.forall { case (xa, xb, _) =>
-          val m = xa + xb
-          a != xa && a != xb && b != xa && b != xb &&
-            a != m && b != m && (a + b) != m
-        } &&
-          accepted.forall { case (xa, xb, _) =>
-            cnt > bounds.getOrElse((xa, xb), 0L) })
-      if (ok) {
-        accepted += c
-        // pooled-count hazard: the result string was (ever) a symbol —
-        // later candidates' bounds are invalid, stop the batch here
-        if (everSym(a + b)) stop = true
-      } else stop = true
-    }
-    accepted.toSeq
-  }
-
-  /** [[bpeMergesBatchedOn]] plus the accepted-prefix length of every batch
-    * round — the SCALING.md BPE measurement's instrument. */
-  def bpeMergesBatchedWithStats(documents: DataFrame, k: Int = 8,
-                                lookahead: Int = 16): (DataFrame, Seq[Int]) = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    require(lookahead >= 1, s"lookahead must be >= 1, got $lookahead")
-    val words = documents
-      .select(explode(split(coalesce(col("text"), lit("")), " ", -1)).as("w"))
-      .filter(length(col("w")) >= 2 && !col("w").contains(BpeSep))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-    // lazy-checkpoint round chaining — see [[bpeMergesOn]]'s plan-growth note
-    val shim = org.apache.spark.sql.graft.CheckpointShim
-    var ws = shim.lazyLocalCheckpoint(words.select(
-      regexp_replace(col("w"), "(?s)(.)", BpeSep + "$1" + BpeSep).as("ws"),
-      col("freq")))
-    // seed the symbol ledger: every distinct INITIAL symbol (one tiny
-    // codepoint-vocabulary job — this collect also materializes the first
-    // checkpoint); accepted concatenations join it batch by batch
-    val everSyms = scala.collection.mutable.Set[String]()
-    everSyms ++= ws
-      .select(explode(split(expr("substring(ws, 2, length(ws) - 2)"),
-        BpeSep + BpeSep)).as("t"))
-      .distinct().as[String].collect()
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    val batchLens = scala.collection.mutable.ArrayBuffer[Int]()
-    var round = 1
-    var exhausted = false
-    while (round <= k && !exhausted) {
-      // job A: the collect doubles as the new checkpoint's materialization
-      val top = bpePairCountsOf(ws)
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(math.min(lookahead, k - round + 1)).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (prev != null) { shim.freeCheckpoint(prev); prev = null }
-      if (top.isEmpty) exhausted = true
-      else {
-        // job B (skipped when only one candidate can be taken anyway)
-        val bounds: Map[(String, String), Long] =
-          if (top.length > 1) createdPairBounds(ws, top.map(t => (t._1, t._2)).toSeq)
-          else Map.empty
-        val accepted = acceptBatchPrefix(top.toSeq, bounds, everSyms.contains)
-        batchLens += accepted.length
-        accepted.foreach { case (a, b, cnt) =>
-          merges += ((round, a, b, cnt)); round += 1
-          everSyms += a + b
-        }
-        prev = ws
-        ws = shim.lazyLocalCheckpoint(accepted.foldLeft(ws) { case (df, (a, b, _)) =>
-          df.select(
-            replace(col("ws"), lit(BpeSep + a + BpeSep + BpeSep + b + BpeSep),
-              lit(BpeSep + a + b + BpeSep)).as("ws"),
-            col("freq"))
-        })
-      }
-    }
-    shim.freeCheckpoint(ws)
-    if (prev != null) shim.freeCheckpoint(prev)
-    (merges.toSeq.toDF("it", "a", "b", "cnt").orderBy("it"), batchLens.toSeq)
-  }
-
-  /** OFF-ENGINE BPE training — the 100 TB merge loop.
-    *
-    * The r10 measurement (SCALING.md) closed the engine-paced options:
-    * sequential training pays one ~0.2 s driver-synchronized job per merge
-    * (~1.7 h for a 30k-merge tokenizer) and provably-safe batching is a
-    * null result (mean accepted prefix 1.62 at 1.23 jobs/merge). The
-    * scalable shape is this one: the corpus pays exactly ONE distributed
-    * job — the word-frequency aggregate every trainer variant starts
-    * from — and the merge loop runs on the COLLECTED vocabulary in driver
-    * memory with an indexed pair cache and a lazy-invalidation heap:
-    * O(affected words) per merge instead of one cluster job. At any
-    * corpus size the vocabulary is the bounded object (distinct
+    * Scale shape: the corpus pays ONE distributed aggregate — the
+    * word-frequency vocabulary, collected once — and the merge loop runs
+    * on it in driver memory ([[bpeTrainLocal]]): O(affected words) per
+    * merge instead of one cluster job per round (SCALING.md r10: 30,000
+    * merges in 29 s where an engine-paced loop needs ~0.2 s per merge). At
+    * any corpus size the vocabulary is the bounded object (distinct
     * whitespace words; `maxVocab` guards the collect loudly — ~50 MB of
     * driver heap per million words).
     *
-    * PROVABLY the sequential merge list ([[bpeMergesOn]]): same
-    * frequency-weighted adjacency counts (overlapping positions
-    * included), same left-to-right non-overlapping merge, same
-    * (cnt DESC, a, b) tie-break compared in UTF-8 BINARY order — what
-    * both Spark's UTF8String and DuckDB compare; Java String order
-    * differs on astral codepoints, so the comparator works on bytes.
-    * Differential-pinned in BpeLocalSpec (real corpus + engineered ties,
-    * overlaps, merge chains, astral symbols); `q_bpe_merges_local` runs
-    * against the SAME k-unrolled sequential DuckDB oracle. */
-  def bpeMergesLocal(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
-    bpeMergesLocalOn(docs(spark, dir), k)
+    * Semantics match the k-unrolled DuckDB oracle ([[bpeMergesSql]]):
+    * one symbol per CODEPOINT (an astral character is one symbol, as for
+    * Spark's and DuckDB's `length`/`substr`), frequency-weighted adjacency
+    * counts with overlapping positions included, left-to-right
+    * non-overlapping merge ([a,b,a,b] → [ab,ab]), and ties compared in
+    * UTF-8 BINARY order — what both Spark's UTF8String and DuckDB compare;
+    * Java String order differs on astral codepoints. */
+  def bpeMerges(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
+    bpeMergesOn(docs(spark, dir), k)
 
-  def bpeMergesLocalOn(documents: DataFrame, k: Int = 8,
-                       maxVocab: Long = 20L * 1000 * 1000): DataFrame = {
+  def bpeMergesOn(documents: DataFrame, k: Int = 8,
+                  maxVocab: Int = BpeMaxVocab): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val words = documents
-      .select(explode(split(coalesce(col("text"), lit("")), " ", -1)).as("w"))
-      .filter(length(col("w")) >= 2 && !col("w").contains(BpeSep))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-    val n = words.count()
-    require(n <= maxVocab,
-      s"bpeMergesLocal: vocabulary has $n distinct words, above maxVocab " +
-        s"$maxVocab — raise the bound deliberately or pre-filter the corpus")
-    val vocab = words.collect().map(r => (r.getString(0), r.getLong(1)))
-    bpeTrainLocal(vocab, k).toDF("it", "a", "b", "cnt").orderBy("it")
+    // a local relation, already in round order: sorting it would cost jobs
+    bpeTrain(documents, k, maxVocab).toDF("it", "a", "b", "cnt")
   }
 
-  /** The driver-side merge kernel behind [[bpeMergesLocalOn]] (exposed for
-    * the probe's direct-timing runs). `vocab` is (word, frequency). */
-  private[graft] def bpeTrainLocal(vocab: Array[(String, Long)],
-                                   k: Int): Seq[(Int, String, String, Long)] = {
-    // one symbol per CODEPOINT, like the engine's (?s)(.) wrap (Java regex
+  /** Default vocabulary cap of BPE training. */
+  val BpeMaxVocab: Int = 20 * 1000 * 1000
+
+  /** [[bpeMergesOn]]'s merge list on the driver. One bounded action: a
+    * vocabulary above the cap shows as `maxVocab + 1` collected rows. */
+  private def bpeTrain(documents: DataFrame, k: Int,
+                       maxVocab: Int): Seq[(Int, String, String, Long)] = {
+    val vocab = bpeVocabulary(documents).limit(maxVocab + 1).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    require(vocab.length <= maxVocab,
+      s"bpeMerges: vocabulary has more than maxVocab = $maxVocab distinct " +
+        "words — raise the bound deliberately or pre-filter the corpus")
+    bpeTrainLocal(vocab, k)
+  }
+
+  /** The driver-side merge kernel behind [[bpeMergesOn]]: an indexed pair
+    * cache plus a lazy-invalidation heap. `vocab` is (word, frequency) in
+    * any order — counts are sums and the heap orders ties itself. */
+  private def bpeTrainLocal(vocab: Array[(String, Long)],
+                            k: Int): Seq[(Int, String, String, Long)] = {
+    // one symbol per CODEPOINT, like the oracle's (?s)(.) wrap (Java regex
     // '.' consumes a full surrogate pair)
     val syms: Array[Array[String]] = vocab.map { case (w, _) =>
       w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
@@ -1600,57 +1402,18 @@ ORDER BY cnt DESC, a, b LIMIT $topN
     out.toSeq
   }
 
-  /** Max frequency-weighted adjacent-triple count per candidate pair —
-    * the created-pair upper bound of [[bpeMergesBatchedOn]]'s acceptance
-    * rule. The triple relation is vocabulary-sized and filtered to the
-    * ≤ `lookahead` candidates before anything is collected. */
-  private def createdPairBounds(ws: DataFrame,
-                                cands: Seq[(String, String)]): Map[(String, String), Long] = {
-    // (a, b) keyed as a␟b — symbols cannot contain the separator
-    val keys = cands.map { case (a, b) => a + BpeSep + b }
-    val triples = ws
-      .select(split(expr("substring(ws, 2, length(ws) - 2)"),
-        BpeSep + BpeSep).as("toks"), col("freq"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("toks"), col("freq"),
-        explode(sequence(lit(1), size(col("toks")) - 2)).as("i"))
-      .select(element_at(col("toks"), col("i")).as("t1"),
-        element_at(col("toks"), col("i") + 1).as("t2"),
-        element_at(col("toks"), col("i") + 2).as("t3"), col("freq"))
-      .withColumn("k12", concat(col("t1"), lit(BpeSep), col("t2")))
-      .withColumn("k23", concat(col("t2"), lit(BpeSep), col("t3")))
-      .filter(col("k12").isin(keys: _*) || col("k23").isin(keys: _*))
-      .groupBy("t1", "t2", "t3").agg(sum("freq").as("cnt"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val best = scala.collection.mutable.Map.empty[(String, String), Long]
-    triples.foreach { case (t1, t2, t3, cnt) =>
-      // (p, a, b): a merge of (a=t2, b=t3) creates (p, ab) ≤ this count
-      val l = (t2, t3)
-      if (cands.contains(l)) best(l) = math.max(best.getOrElse(l, 0L), cnt)
-      // (a, b, q): creates (ab, q)
-      val r = (t1, t2)
-      if (cands.contains(r)) best(r) = math.max(best.getOrElse(r, 0L), cnt)
-    }
-    best.toMap
-  }
-
-  /** Frequency-weighted adjacent symbol-pair counts over a wrapped-string
-    * word relation (ws, freq) — the merge loop's inner statistic. */
-  private def bpePairCountsOf(ws: DataFrame): DataFrame =
-    ws.select(split(expr(s"substring(ws, 2, length(ws) - 2)"),
-        BpeSep + BpeSep).as("toks"), col("freq"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("toks"), col("freq"),
-        explode(sequence(lit(1), size(col("toks")) - 1)).as("i"))
-      .select(element_at(col("toks"), col("i")).as("a"),
-        element_at(col("toks"), col("i") + 1).as("b"), col("freq"))
-      .groupBy("a", "b").agg(sum("freq").as("cnt"))
-
   /** Shared k-round CTE body for the BPE oracles: `words` (vocabulary +
     * freq), `ws0..wsK` (the wrapped-string evolution, keeping `w` so the
     * encode oracle can map words to their final segmentation), and
-    * `m1..mK` (the per-round top pairs). */
+    * `m1..mK` (the per-round top pairs).
+    *
+    * Representation: each word's symbol sequence is one string with every
+    * symbol wrapped in [[BpeSep]] (`abc` → `␟a␟␟b␟␟c␟`). Merging pair
+    * (a,b) is then a literal `replace(ws, ␟a␟␟b␟, ␟ab␟)` — and because a
+    * match always ends exactly at a token boundary, string-level
+    * left-to-right non-overlapping replacement is EXACTLY token-level BPE
+    * merge semantics ([a,b,a,b] → [ab,ab]), which is what keeps the
+    * k-round oracle total in plain SQL. */
   private def bpeRoundsCteSql(k: Int): String = {
     val S = BpeSep
     val rounds = (1 to k).map { j =>
@@ -1691,59 +1454,29 @@ ORDER BY it
     * document, the token count under the k-merge BPE (plus the raw
     * whitespace-token count for the compression-ratio signal). The
     * deployment-relevant output of tokenizer training: predicted token
-    * budgets per document drive packing/costing at corpus scale.
-    *
-    * Factored through the vocabulary like [[bpeMerges]]: merges are
-    * learned once (vocab-sized loop), each DISTINCT word is segmented
-    * once (k literal replaces over the wrapped string — identical
-    * semantics to training, same separators), and the corpus-wide cost
-    * is one explode + join + aggregate. Whitespace tokens outside the
-    * trained vocabulary (codepoint length < 2, or containing the
-    * separator) count as ONE token each — pinned in both engines. */
+    * budgets per document drive packing/costing at corpus scale. Trains
+    * through [[bpeMergesOn]] (so it shares the [[BpeMaxVocab]] cap), then
+    * encodes with [[bpeEncodeCountsWith]]. */
   def bpeEncodeCounts(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
     bpeEncodeCountsOn(docs(spark, dir), k)
 
-  def bpeEncodeCountsOn(documents: DataFrame, k: Int = 8): DataFrame = {
-    val merges = bpeMergesOn(documents, k).collect()
-      .map(r => (r.getString(1), r.getString(2)))
-    val words = documents
-      .select(col("doc_id"),
-        explode(split(coalesce(col("text"), lit("")), " ", -1)).as("w"))
-    val vocab = words
-      .filter(length(col("w")) >= 2 && !col("w").contains(BpeSep))
-      .select("w").distinct()
-    val encoded = merges.foldLeft(
-      vocab.withColumn("ws",
-        regexp_replace(col("w"), "(?s)(.)", BpeSep + "$1" + BpeSep))) {
-      case (df, (a, b)) => df.withColumn("ws",
-        replace(col("ws"), lit(BpeSep + a + BpeSep + BpeSep + b + BpeSep),
-          lit(BpeSep + a + b + BpeSep)))
-    }
-      // tokens = count of the '␟␟' separators + 1
-      .withColumn("n_tok", expr(
-        s"CAST((length(ws) - length(replace(ws, '$BpeSep$BpeSep', ''))) DIV 2 + 1 AS BIGINT)"))
-      .select("w", "n_tok")
-    words.join(encoded, Seq("w"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("n_tok"), lit(1L))).as("n_bpe_tokens"),
-        count(lit(1)).as("n_ws_tokens"))
-      .orderBy("doc_id")
-  }
+  def bpeEncodeCountsOn(documents: DataFrame, k: Int = 8): DataFrame =
+    bpeEncodeCountsWith(documents,
+      bpeTrain(documents, k, BpeMaxVocab).map(m => (m._2, m._3)))
 
   /** Per-word token count under a TRAINED merge list, applied by min-rank
     * iteration — the standard BPE encoder shape (GPT-2's): repeatedly
     * merge the lowest-rank adjacent pair present, left-to-right
     * non-overlapping. PROVABLY ≡ applying the merges sequentially (the
-    * engine's replace chain): a merge can only create pairs involving its
+    * oracle's replace chain): a merge can only create pairs involving its
     * OWN output symbol, and any pair containing that symbol was learned
     * AFTER it existed — i.e. at a later rank — so no earlier-rank pair
     * ever (re)appears once passed. Cost per word is O(len²) hash lookups
     * INDEPENDENT of the merge count — what makes a 10k-merge tokenizer
-    * encodable (the replace chain is one Catalyst column per merge: fine
-    * at the k=8 oracle scale, a plan explosion at 10k).
-    * Differential-pinned against [[bpeEncodeCountsOn]] in BpeLocalSpec. */
-  private[graft] def bpeEncodeWordTokens(w: String, merges: Array[(String, String)],
-                                         rank: collection.Map[(String, String), Int]): Int = {
+    * encodable (SCALING.md r11: a replace chain is one Catalyst column per
+    * merge, a plan explosion at 10k). */
+  private def bpeEncodeWordTokens(w: String, merges: Array[(String, String)],
+                                  rank: collection.Map[(String, String), Int]): Int = {
     var s = w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
     var done = s.length < 2
     while (!done) {
@@ -1769,14 +1502,14 @@ ORDER BY it
     s.length
   }
 
-  /** [[bpeEncodeCounts]] with a CALLER-SUPPLIED merge list (the
-    * [[bpeMergesLocalOn]] output — the scan→local-loop→encode round trip
-    * a real tokenizer build runs): distinct words encode once via the
-    * min-rank kernel with the broadcast rank map, then one explode +
-    * left join + aggregate over the corpus. Same out-of-vocabulary rule
-    * as the engine encode (short / separator-carrying tokens count 1). */
-  def bpeEncodeCountsLocalOn(documents: DataFrame,
-                             merges: Seq[(String, String)]): DataFrame = {
+  /** [[bpeEncodeCounts]] with a caller-supplied merge list: each distinct
+    * vocabulary word encodes once through [[bpeEncodeWordTokens]] (the
+    * rank map ships in the task closure), then one explode + left join +
+    * aggregate over the corpus. Whitespace tokens outside the vocabulary
+    * (codepoint length < 2, or carrying the separator) count as ONE token
+    * each — pinned in both engines. */
+  def bpeEncodeCountsWith(documents: DataFrame,
+                          merges: Seq[(String, String)]): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val mArr = merges.toArray
@@ -1784,10 +1517,7 @@ ORDER BY it
     val words = documents
       .select(col("doc_id"),
         explode(split(coalesce(col("text"), lit("")), " ", -1)).as("w"))
-    val vocab = words
-      .filter(length(col("w")) >= 2 && !col("w").contains(BpeSep))
-      .select("w").distinct()
-    val encoded = vocab.as[String]
+    val encoded = bpeVocabulary(documents).select("w").as[String]
       .map(w => (w, bpeEncodeWordTokens(w, mArr, rank).toLong))
       .toDF("w", "n_tok")
     words.join(encoded, Seq("w"), "left")

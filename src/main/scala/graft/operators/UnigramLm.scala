@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * distributed flatMap over the DISTINCT-WORD relation (the same
   * relation BPE trains on) followed by a piece-count aggregate collected
   * at model size; the driver loop holds [[EmIters]] rounds (the
-  * off-engine-loop pattern of [[TextAnalysis.bpeMergesLocalOn]]). At
+  * off-engine-loop pattern of [[TextAnalysis.bpeMergesOn]]). At
   * 100 TB the distinct-word relation shards by word and the DP is
   * embarrassingly parallel per word. */
 object UnigramLm {
@@ -273,7 +273,7 @@ object UnigramLm {
   }
 
   /** Driver-local soft trainer — the executable reference for
-    * [[trainSoftOn]] (the bpeMergesLocal local≡engine discipline) plus
+    * [[trainSoftOn]] (pinned equal to the engine) plus
     * the per-round log-likelihood trace for the EM-monotonicity spec.
     * Returns (final pruned (piece, n, nlp) rows, ll under the model
     * entering each round). */

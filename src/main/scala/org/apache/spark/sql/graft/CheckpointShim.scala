@@ -55,24 +55,8 @@ object CheckpointShim {
   def statsHonestLocalCheckpoint(df: DataFrame): DataFrame =
     honestStats(df.localCheckpoint())
 
-  /** LAZY local checkpoint — the iterative-model-loop primitive (BPE's
-    * merge rounds). Chaining each round's relation over the previous
-    * round's `.cache()` leaves the full logical lineage in place, and the
-    * optimizer/cache machinery re-renders the nested InMemoryRelation
-    * chain with ~2× growth PER ROUND (measured in BpeProbe `plansize`:
-    * 1.6 kB → 21 MB of optimized plan in 14 rounds; OOM by ~20). A local
-    * checkpoint truncates the round's plan to a flat LogicalRDD instead —
-    * O(1) plan size per round — and `eager = false` defers materialization
-    * to the round's one real action, preserving the one-job-per-round
-    * discipline. The RDD side self-truncates too (localCheckpoint marks
-    * the RDD lineage for truncation at first materialization), so neither
-    * the SQL plan nor the RDD DAG grows with the round count. */
-  def lazyLocalCheckpoint(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
-
-  /** Free the blocks of a [[lazyLocalCheckpoint]]'d relation once the NEXT
-    * round has materialized (its own checkpoint truncation ends the last
-    * reference to these blocks). No-op for non-checkpoint plans. */
+  /** Free the blocks of a local-checkpointed relation once nothing reads
+    * it any more. No-op for non-checkpoint plans. */
   def freeCheckpoint(df: DataFrame): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed match {

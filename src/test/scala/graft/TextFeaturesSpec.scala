@@ -3,8 +3,9 @@ package graft
 import graft.operators.TextAnalysis
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Featurization operators: hashed tf and BPE pair counts must agree with
-  * plain-loop reimplementations over the collected corpus. */
+/** Featurization operators: hashed tf, BPE pair counts, merges and encode
+  * counts must agree with plain-loop reimplementations over the collected
+  * corpus. */
 class TextFeaturesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -82,52 +83,13 @@ class TextFeaturesSpec extends AnyFunSuite {
       "no lone surrogate halves in output")
   }
 
-  /** Classic token-level BPE loop (Sennrich 2016), codepoint-based —
-    * the independent reimplementation the engine's wrapped-string
-    * replace() formulation must reproduce merge-for-merge. */
-  private def bpeLoop(wordFreq: collection.Map[String, Long],
-                      k: Int): Seq[(Int, String, String, Long)] = {
-    var words: Seq[(Vector[String], Long)] = wordFreq.toSeq.map { case (w, f) =>
-      w.codePoints().toArray.toVector
-        .map(cp => new String(Character.toChars(cp))) -> f
-    }
-    val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    for (round <- 1 to k) {
-      val counts = new scala.collection.mutable.HashMap[(String, String), Long]()
-      words.foreach { case (syms, f) =>
-        (0 until syms.length - 1).foreach { i =>
-          val p = (syms(i), syms(i + 1))
-          counts(p) = counts.getOrElse(p, 0L) + f
-        }
-      }
-      if (counts.nonEmpty) {
-        val ((a, b), c) = counts.minBy { case ((a, b), c) => (-c, a, b) }
-        out += ((round, a, b, c))
-        words = words.map { case (syms, f) =>
-          val merged = Vector.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
-              merged += (a + b); i += 2
-            } else { merged += syms(i); i += 1 }
-          }
-          merged.result() -> f
-        }
-      }
-    }
-    out.toSeq
-  }
-
   test("BPE merge loop ≡ token-level loop reimplementation") {
     val k = 8
     val got = TextAnalysis.bpeMerges(spark, dir, k).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(got.length == k)
-    val wordFreq = new scala.collection.mutable.HashMap[String, Long]()
-    texts.foreach(_._2.split(" ", -1)
-      .filter(w => w.codePointCount(0, w.length) >= 2 && !w.contains(TextAnalysis.BpeSep))
-      .foreach(w => wordFreq(w) = wordFreq.getOrElse(w, 0L) + 1))
-    assert(got == bpeLoop(wordFreq, k), s"\n got=$got\nwant=${bpeLoop(wordFreq, k)}")
+    val want = BpeReference.merges(BpeReference.vocabulary(texts.map(_._2)), k)
+    assert(got == want, s"\n got=$got\nwant=$want")
     // merged symbols actually grow: by round 8 some merge must involve a
     // multi-char symbol (a merge OF a previous merge), or the loop never
     // left the pair statistic
@@ -140,35 +102,9 @@ class TextFeaturesSpec extends AnyFunSuite {
     val k = 8
     val got = TextAnalysis.bpeEncodeCounts(spark, dir, k).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val wordFreq = new scala.collection.mutable.HashMap[String, Long]()
-    texts.foreach(_._2.split(" ", -1)
-      .filter(w => w.codePointCount(0, w.length) >= 2 && !w.contains(TextAnalysis.BpeSep))
-      .foreach(w => wordFreq(w) = wordFreq.getOrElse(w, 0L) + 1))
-    val merges = bpeLoop(wordFreq, k).map { case (_, a, b, _) => (a, b) }
-    def encode(w: String): Long = {
-      var syms: Vector[String] = w.codePoints().toArray.toVector
-        .map(cp => new String(Character.toChars(cp)))
-      merges.foreach { case (a, b) =>
-        val out = Vector.newBuilder[String]
-        var i = 0
-        while (i < syms.length) {
-          if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
-            out += (a + b); i += 2
-          } else { out += syms(i); i += 1 }
-        }
-        syms = out.result()
-      }
-      syms.length.toLong
-    }
-    val want = texts.map { case (id, t) =>
-      val ws = t.split(" ", -1)
-      val nBpe = ws.map { w =>
-        if (w.codePointCount(0, w.length) >= 2 && !w.contains(TextAnalysis.BpeSep))
-          encode(w)
-        else 1L
-      }.sum
-      (id, nBpe, ws.length.toLong)
-    }.sortBy(_._1)
+    val merges = BpeReference.merges(BpeReference.vocabulary(texts.map(_._2)), k)
+      .map { case (_, a, b, _) => (a, b) }
+    val want = BpeReference.encodeCounts(texts, merges)
     assert(got == want,
       s"\n got=${got.take(3)}\nwant=${want.take(3)}")
     // the tokenizer must actually compress: BPE tokens < raw codepoints
