@@ -92,19 +92,22 @@ FROM documents GROUP BY 1 ORDER BY keep_id
     * would surface any such perturbation rather than mask it. */
   def shingleRows(docsDf: DataFrame): DataFrame = {
     import docsDf.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
     // corpus-sized CALLERS pre-spread their input (Partitioning.spread —
     // r14 opt); the index batch paths (probe/append, designed around small
     // batches) deliberately skip the extra exchange
     docsDf.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val sh = shingleSet(if (text == null) "" else text)
-        sh.iterator.map(s =>
-          (id, XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)))
-      }
+      .flatMap { case (id, text) => shingleKeys(text).iterator.map(k => (id, k)) }
       .toDF("doc_id", "shingle")
+  }
+
+  /** One document's [[shingleRows]] keys (NULL text = empty), for callers
+    * that hold the text on the driver. */
+  def shingleKeys(text: String): Array[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    shingleSet(if (text == null) "" else text)
+      .map(s => XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L))
   }
 
   /** Default document-frequency cap for shingles entering the inverted

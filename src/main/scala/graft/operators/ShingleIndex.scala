@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Persistent shingle inverted index — build once, probe per batch.
   *
@@ -178,6 +179,106 @@ object ShingleIndex {
         col("exact_dup") || coalesce(col("j") >= threshold, lit(false)))
       .select(col("doc_id"), col("exact_dup"), col("dup_of"), col("shared"),
         round(col("j"), 6).as("jaccard"), col("is_dup"))
+  }
+
+  /** One arrival held on the driver: id, canonical fingerprint
+    * ([[Dedup.canonicalFp]] of the text, NULL as empty) and shingle keys
+    * ([[Dedup.shingleKeys]]). */
+  private[graft] final case class Arrival(id: Long, fp: String, keys: Array[Long])
+
+  /** An arrival's best match in one relation: `j` unrounded (it decides),
+    * `jaccard` = round(j, 6) as Spark rounds it. */
+  private[graft] final case class Match(dupOf: Long, j: Double, jaccard: Double, shared: Long)
+
+  /** One relation's answers to [[probeArrivals]]: the arrivals whose
+    * fingerprint it holds, and the best match per arrival that shares a
+    * kept shingle with it. */
+  private[graft] final case class Answers(exact: Set[Long], best: Map[Long, Match])
+
+  private val HitsSchema = StructType(Seq(
+    StructField("key", LongType, nullable = false),
+    StructField("hits", ArrayType(StructType(Seq(
+      StructField("batch_id", LongType, nullable = false),
+      StructField("nb", LongType, nullable = false))), containsNull = false),
+      nullable = false)))
+
+  /** [[probe]] for arrivals held on the driver, against the stored index
+    * and, when given, a live `(doc_id, text)` relation (the landing zone)
+    * that is shingled and df-capped per call like
+    * [[Dedup.incrementalDedupOn]]'s corpus side (default cap) — `nc`
+    * counts the cap-kept keys. Returns (index answers, live answers),
+    * each exactly what [[probe]] / `incrementalDedupOn` would say for
+    * that relation.
+    *
+    * Plan: the arrivals enter as ONE local relation, a row per distinct key
+    * carrying the (arrival, set size) pairs that hold it, so every join
+    * against them is a broadcast and nothing needs a checkpoint. Both
+    * relations' arg-max legs and both fingerprint legs are one union,
+    * collected in one action (at most one best row per arrival and
+    * relation, plus the matched fingerprints); AQE runs the legs' stages
+    * side by side. The live leg needs no separate size pass: grouping its
+    * kept (key, doc) rows by doc yields `nc` and the doc's hits together. */
+  private[graft] def probeArrivals(spark: SparkSession, tag: String, live: Option[DataFrame],
+                                   arrivals: Seq[Arrival]): (Answers, Option[Answers]) = {
+    import scala.jdk.CollectionConverters._
+    graft.plans.ArgMaxBest.ensureRegistered(spark)
+    graft.plans.CappedCollectLong.ensureRegistered(spark)
+    Seq(occTable(tag), sizesTable(tag), fpTable(tag)).foreach(spark.catalog.refreshTable)
+    IndexCanary.check(spark, occTable(tag), sizesTable(tag), fpTable(tag))
+    val hitRows = arrivals
+      .flatMap(a => a.keys.iterator.map(k => (k, Row(a.id, a.keys.length.toLong))))
+      .groupBy(_._1).iterator
+      .map { case (k, hs) => Row(k, hs.map(_._2)) }.toSeq
+    val hits = spark.createDataFrame(hitRows.asJava, HitsSchema)
+    val fps = arrivals.map(_.fp).distinct
+    def best(leg: Int, pairs: DataFrame): DataFrame = pairs
+      .withColumn("j", col("shared").cast("double")
+        / (col("nb") + col("nc") - col("shared")).cast("double"))
+      .groupBy("batch_id")
+      .agg(expr(s"${graft.plans.ArgMaxBest.FuncName}(j, corpus_id, shared)").as("best"))
+      .select(lit(leg).as("leg"), col("batch_id"), col("best.id").as("dup_of"),
+        col("best.score").as("j"), round(col("best.score"), 6).as("jaccard"),
+        col("best.payload").as("shared"), lit(null).cast("string").as("fp"))
+    def exact(leg: Int, stored: DataFrame): DataFrame = stored
+      .filter(col("fp").isin(fps: _*))
+      .select(lit(leg).as("leg"), lit(null).cast("long").as("batch_id"),
+        lit(null).cast("long").as("dup_of"), lit(null).cast("double").as("j"),
+        lit(null).cast("double").as("jaccard"), lit(null).cast("long").as("shared"),
+        col("fp"))
+    val indexLegs = Seq(
+      best(0, spark.table(occTable(tag)).join(hits, "key")
+        .select(col("corpus_id"), explode(col("hits")).as("h"))
+        .groupBy(col("h.batch_id").as("batch_id"), col("h.nb").as("nb"), col("corpus_id"))
+        .agg(count(lit(1)).as("shared"))
+        .join(spark.table(sizesTable(tag)), "corpus_id")),
+      exact(0, spark.table(fpTable(tag))))
+    val liveLegs = live.toSeq.flatMap { l =>
+      val kept = Dedup.shingleRows(l).withColumnRenamed("shingle", "key")
+        .groupBy("key")
+        .agg(expr(s"${graft.plans.CappedCollectLong.FuncName}(doc_id, " +
+          s"${Dedup.DefaultMaxShingleDf})").as("ids"))
+        .filter(col("ids").isNotNull)
+      Seq(
+        best(1, kept.join(hits, Seq("key"), "left")
+          .select(explode(col("ids")).as("corpus_id"), col("hits"))
+          .groupBy("corpus_id")
+          .agg(count(lit(1)).as("nc"), flatten(collect_list(col("hits"))).as("hits"))
+          .select(col("corpus_id"), col("nc"), explode(col("hits")).as("h"))
+          .groupBy(col("corpus_id"), col("nc"), col("h.batch_id").as("batch_id"),
+            col("h.nb").as("nb"))
+          .agg(count(lit(1)).as("shared"))),
+        exact(1, l.select(Dedup.canonicalFp(coalesce(col("text"), lit(""))).as("fp"))))
+    }
+    val rows = (indexLegs ++ liveLegs).reduce(_ unionByName _).collect()
+    def answers(leg: Int): Answers = {
+      val mine = rows.filter(_.getInt(0) == leg)
+      val seen = mine.filter(!_.isNullAt(6)).map(_.getString(6)).toSet
+      Answers(
+        arrivals.filter(a => seen(a.fp)).map(_.id).toSet,
+        mine.filter(_.isNullAt(6)).map(r =>
+          r.getLong(1) -> Match(r.getLong(2), r.getDouble(3), r.getDouble(4), r.getLong(5))).toMap)
+    }
+    (answers(0), live.map(_ => answers(1)))
   }
 
   /** Admit `newDocs` into the index without a rebuild.

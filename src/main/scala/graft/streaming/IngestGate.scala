@@ -1,14 +1,15 @@
 package graft.streaming
 
-import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
+import graft.operators.{Dedup, ShingleIndex}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 /** Streaming corpus-ingestion gate — the daily-crawl pipeline as a
   * structured stream: every micro-batch of arriving documents is gated
-  * against the corpus with [[Dedup.incrementalDedupOn]] (canonical
-  * exact-duplicate check + best near-dup Jaccard match), admitted
+  * against the corpus (canonical exact-duplicate check + best near-dup
+  * Jaccard match, [[Dedup.incrementalDedupOn]]'s semantics), admitted
   * documents land in an append-only parquet zone, and every document —
   * admitted or dropped — gets a verdict receipt.
   *
@@ -30,20 +31,41 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the landing zone converges to exactly-once content (the receipts may
   * carry the extra attempt, honestly labeled with its batch id).
   *
-  * Scale: the gate inherits the incremental-dedup plan — fused corpus
-  * index, equi-join probe, stats-honest checkpoints, no static
-  * broadcasts; the landing-zone re-read is a parquet scan that prunes to
-  * the columns the gate needs. */
+  * Two plans:
+  *  - [[gateBatch]] (corpus relation, used by [[start]]) runs
+  *    `incrementalDedupOn` over the whole corpus per batch — fused
+  *    corpus index, equi-join probe, stats-honest checkpoints. It is also
+  *    the reference the indexed gate is checked against.
+  *  - [[gateBatchIndexed]] (pre-built [[ShingleIndex]], used by
+  *    [[startIndexed]]) is arrival-sized: one bounded collect of the
+  *    arrivals, one action that probes the index and the landing zone
+  *    against them as a broadcast local relation, then the in-batch
+  *    collapse, the relation merge and the receipts on the driver. Its
+  *    receipts and kept docs are local relations, so consuming them
+  *    re-runs nothing.
+  * The landing-zone re-read is a parquet scan, with the schema the gate
+  * itself writes, that prunes to the columns the gate needs. */
 object IngestGate {
 
   /** Canonical content fingerprint (same normalization as [[Dedup.exact]]). */
   private def fp = Dedup.canonicalFp(coalesce(col("text"), lit("")))
 
-  /** Gate one arriving batch against `corpus`; returns (receipts, kept).
-    * Receipts carry one row per ARRIVING doc: corpus verdicts for the
-    * within-batch representatives, plus (exact_dup=true, dup_of=the
-    * batch representative) rows for within-batch copies. Exposed for
-    * direct batch use and for the spec. */
+  /** `(doc_id, text)` — what the gate reads and what it lands. */
+  private val DocSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  private val ReceiptSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("exact_dup", BooleanType, nullable = false),
+    StructField("dup_of", LongType), StructField("shared", LongType),
+    StructField("jaccard", DoubleType),
+    StructField("is_dup", BooleanType, nullable = false)))
+
+  /** Most arrivals one [[gateBatchIndexed]] call takes: it holds the batch
+    * (ids, texts, shingle keys) on the driver, so a source feeding it must
+    * cap its micro-batch size. A larger batch fails loudly. */
+  val MaxBatchDocs: Int = 50 * 1000
+
   /** Within-batch exact collapse: lowest doc_id per canonical fingerprint
     * represents the content; later copies get a receipt pointing at their
     * in-batch representative. Returns (unique, inBatchDup receipts). */
@@ -74,38 +96,16 @@ object IngestGate {
     (receipts, kept)
   }
 
+  /** Gate one arriving batch against `corpus`; returns (receipts, kept).
+    * Receipts carry one row per ARRIVING doc: corpus verdicts for the
+    * within-batch representatives, plus (exact_dup=true, dup_of=the
+    * batch representative) rows for within-batch copies. Exposed for
+    * direct batch use and for the spec. */
   def gateBatch(corpus: DataFrame, batch: DataFrame,
                 threshold: Double): (DataFrame, DataFrame) = {
     val (unique, inBatchDups) = collapseBatch(batch)
     val verdicts = Dedup.incrementalDedupOn(corpus, unique, threshold)
     assemble(batch, verdicts, inBatchDups)
-  }
-
-  /** Merge two one-row-per-doc verdict relations (same schema as
-    * [[Dedup.incrementalDedupOn]]'s output) into one: exact flags OR
-    * together; the best near-dup match is the higher Jaccard, ties to the
-    * lower dup_of — the same (j desc, id asc) preference the per-relation
-    * ArgMaxStruct uses, applied here to the ROUNDED j the outputs carry
-    * (divergence from a single global argmax is only possible for
-    * matches equal to 6 decimals across the two relations). */
-  private def mergeVerdicts(a: DataFrame, b: DataFrame, threshold: Double): DataFrame = {
-    val bb = b.select(col("doc_id"), col("exact_dup").as("b_exact"),
-      col("dup_of").as("b_dup_of"), col("shared").as("b_shared"),
-      col("jaccard").as("b_jaccard"))
-    val aj = coalesce(col("jaccard"), lit(-1d))
-    val bj = coalesce(col("b_jaccard"), lit(-1d))
-    val bWins = bj > aj ||
-      (bj === aj && coalesce(col("b_dup_of"), lit(Long.MaxValue)) <
-        coalesce(col("dup_of"), lit(Long.MaxValue)))
-    a.join(bb, "doc_id")
-      .select(
-        col("doc_id"),
-        (col("exact_dup") || col("b_exact")).as("exact_dup"),
-        when(bWins, col("b_dup_of")).otherwise(col("dup_of")).as("dup_of"),
-        when(bWins, col("b_shared")).otherwise(col("shared")).as("shared"),
-        when(bWins, col("b_jaccard")).otherwise(col("jaccard")).as("jaccard"))
-      .withColumn("is_dup",
-        col("exact_dup") || coalesce(col("jaccard") >= threshold, lit(false)))
   }
 
   /** Gate one arriving batch against a PRE-BUILT [[graft.operators.ShingleIndex]]
@@ -115,20 +115,59 @@ object IngestGate {
     * semantics match [[gateBatch]] over corpus ∪ landing, except the df
     * cap applies per relation rather than over the union (the operator
     * family's documented asymmetric-cap convention; identical while the
-    * cap is inert) and cross-relation best-match ties break on the
-    * rounded j (see [[mergeVerdicts]]). */
+    * cap is inert) and the best matches of the two relations merge on the
+    * ROUNDED j (the receipts' `jaccard`), ties to the lower `dup_of` — a
+    * single global arg-max could differ only for matches equal to 6
+    * decimals across the two relations. `is_dup` thresholds the winner's
+    * unrounded j, as `incrementalDedupOn` does.
+    *
+    * Plan: one `limit(MaxBatchDocs + 1)` collect of `(doc_id, text, fp)`
+    * (no job for a local batch), one [[ShingleIndex.probeArrivals]] action
+    * for the collapsed arrivals, then collapse, merge and receipts on the
+    * driver. Returns (receipts, kept) as local relations. `doc_id` must be
+    * unique within the batch. */
   def gateBatchIndexed(indexTag: String, landing: Option[DataFrame],
                        batch: DataFrame, threshold: Double): (DataFrame, DataFrame) = {
+    import scala.jdk.CollectionConverters._
     val spark = batch.sparkSession
-    val (unique, inBatchDups) = collapseBatch(batch)
-    val corpusVerdicts = graft.operators.ShingleIndex.probe(spark, indexTag, unique, threshold)
-    val verdicts = landing match {
-      case None => corpusVerdicts
-      case Some(l) =>
-        mergeVerdicts(corpusVerdicts,
-          Dedup.incrementalDedupOn(l, unique, threshold), threshold)
+    val rows = batch.select(col("doc_id").cast("long"), col("text"), fp.as("fp"))
+      .limit(MaxBatchDocs + 1).collect()
+    require(rows.length <= MaxBatchDocs,
+      s"gateBatchIndexed: the batch has more than MaxBatchDocs = $MaxBatchDocs " +
+        "arrivals — cap the source's micro-batch size (e.g. maxFilesPerTrigger)")
+    require(rows.map(_.getLong(0)).distinct.length == rows.length,
+      "gateBatchIndexed: doc_id must be unique within a batch")
+    // in-batch exact collapse: the lowest doc_id per fingerprint represents it
+    val keepOf = rows.groupMapReduce(_.getString(2))(_.getLong(0))(math.min)
+    val unique = rows.filter(r => keepOf(r.getString(2)) == r.getLong(0))
+      .map(r => ShingleIndex.Arrival(r.getLong(0), r.getString(2),
+        Dedup.shingleKeys(r.getString(1))))
+    val (index, live) =
+      if (unique.isEmpty) (ShingleIndex.Answers(Set.empty, Map.empty), None)
+      else ShingleIndex.probeArrivals(spark, indexTag, landing, unique.toSeq)
+    def jOf(m: Option[ShingleIndex.Match]) = m.fold(-1d)(_.jaccard)
+    def idOf(m: Option[ShingleIndex.Match]) = m.fold(Long.MaxValue)(_.dupOf)
+    val receipts = rows.map { r =>
+      val id = r.getLong(0)
+      val keep = keepOf(r.getString(2))
+      if (keep != id) Row(id, true, keep, null, null, true)
+      else {
+        val a = index.best.get(id)
+        val best = live.fold(a) { l =>
+          val b = l.best.get(id)
+          if (jOf(b) > jOf(a) || (jOf(b) == jOf(a) && idOf(b) < idOf(a))) b else a
+        }
+        val exact = index.exact(id) || live.exists(_.exact(id))
+        Row(id, exact, best.map(m => Long.box(m.dupOf)).orNull,
+          best.map(m => Long.box(m.shared)).orNull, best.map(m => Double.box(m.jaccard)).orNull,
+          exact || best.exists(_.j >= threshold))
+      }
     }
-    assemble(batch, verdicts, inBatchDups)
+    val kept = rows.zip(receipts).collect {
+      case (r, v) if !v.getBoolean(5) => Row(r.getLong(0), r.getString(1))
+    }
+    (spark.createDataFrame(receipts.toSeq.asJava, ReceiptSchema),
+      spark.createDataFrame(kept.toSeq.asJava, DocSchema))
   }
 
   /** Start the streaming gate against a pre-built [[graft.operators.ShingleIndex]]
@@ -137,7 +176,11 @@ object IngestGate {
     * never mutated by the stream — fold the landing zone into it with
     * `ShingleIndex.append`/`rebuild` during quiescence (between
     * AvailableNow drains, after checkpoint commit), then truncating the
-    * landing zone is safe because no uncommitted batch can replay. */
+    * landing zone is safe because no uncommitted batch can replay.
+    *
+    * The source MUST cap its micro-batch size (e.g. `maxFilesPerTrigger`
+    * on a file source): [[gateBatchIndexed]] collects each batch to the
+    * driver and fails a batch of more than [[MaxBatchDocs]] arrivals. */
   def startIndexed(indexTag: String, stream: DataFrame, landingDir: String,
                    receiptsDir: String, checkpointDir: String,
                    threshold: Double = 0.5): StreamingQuery =
@@ -145,29 +188,40 @@ object IngestGate {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-          val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val landed =
-            if (fs.exists(landingPath))
-              Some(spark.read.parquet(landingDir).select("doc_id", "text"))
-            else None
-          val (receipts, kept) =
-            gateBatchIndexed(indexTag, landed, batch.select("doc_id", "text"), threshold)
-          receipts.persist()
-          try {
-            receipts.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(receiptsDir)
-            kept.write.mode("append").parquet(landingDir)
-          } finally receipts.unpersist()
+        val spark = batch.sparkSession
+        val (receipts, kept) = gateBatchIndexed(indexTag, readLanding(spark, landingDir),
+          batch.select("doc_id", "text"), threshold)
+        // local relations: neither the emptiness test nor the two writes
+        // re-run the gate
+        if (!receipts.isEmpty) {
+          receipts.withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(receiptsDir)
+          kept.write.mode("append").parquet(landingDir)
         }
       }
       .start()
 
+  /** The landing zone as the gate wrote it, `None` before its first write.
+    * Read with [[DocSchema]]: schema inference would cost a job per
+    * micro-batch. Hadoop FS, not java.io.File: the landing zone IS the
+    * ledger, and a local-only existence check on S3/HDFS would silently
+    * disable cross-batch dedup. */
+  private def readLanding(spark: org.apache.spark.sql.SparkSession,
+                          landingDir: String): Option[DataFrame] = {
+    val landingPath = new org.apache.hadoop.fs.Path(landingDir)
+    val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option.when(fs.exists(landingPath))(spark.read.schema(DocSchema).parquet(landingDir))
+  }
+
   /** Start the streaming gate. `stream` must carry (doc_id: long,
     * text: string). Admitted docs append to `landingDir`; per-doc
-    * verdicts append to `receiptsDir` with the micro-batch id. */
+    * verdicts append to `receiptsDir` with the micro-batch id. The static
+    * corpus is read with schema inference, so a type drift there fails
+    * loudly; the landing zone is read with the schema the gate writes.
+    *
+    * Cap the source's micro-batch size (e.g. `maxFilesPerTrigger`) here
+    * too: the same stream moved to [[startIndexed]] meets its gate's
+    * collect bound, [[MaxBatchDocs]]. */
   def start(corpusDir: String, stream: DataFrame, landingDir: String,
             receiptsDir: String, checkpointDir: String,
             threshold: Double = 0.5): StreamingQuery =
@@ -179,16 +233,7 @@ object IngestGate {
           val spark = batch.sparkSession
           val corpusStatic = spark.read.parquet(s"$corpusDir/documents.parquet")
             .select("doc_id", "text")
-          // Hadoop FS, not java.io.File: the landing zone IS the ledger,
-          // and a local-only existence check on S3/HDFS would silently
-          // disable cross-batch dedup
-          val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-          val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val landed =
-            if (fs.exists(landingPath))
-              Seq(spark.read.parquet(landingDir).select("doc_id", "text"))
-            else Nil
-          val corpus = (corpusStatic +: landed).reduce(_ unionAll _)
+          val corpus = (corpusStatic +: readLanding(spark, landingDir).toSeq).reduce(_ unionAll _)
           val (receipts, kept) = gateBatch(corpus, batch.select("doc_id", "text"), threshold)
           // the gate (corpus index + probe) is computed once: receipts are
           // pinned before both writes, released after (Serving's pattern)

@@ -66,22 +66,40 @@ class IngestGateSpec extends AnyFunSuite {
 
   test("gateBatchIndexed ≡ gateBatch over corpus ∪ landing (real carves)") {
     import org.apache.spark.sql.functions.col
+    import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
+    // the same text under an index id and a landing id: an arrival near it
+    // scores equal j in both relations, and the lower id must win
+    val tieA = "ledger entry alpha beta gamma delta epsilon zeta eta theta"
+    val tieB = "audit trail one two three four five six seven eight nine"
     val corpus = docs.filter(col("doc_id") % 13 =!= 0 && col("doc_id") % 3 =!= 0)
+      .unionByName(Seq((1000005L, tieA), (1000001L, tieB)).toDF("doc_id", "text"))
     val landing = docs.filter(col("doc_id") % 13 =!= 0 && col("doc_id") % 3 === 0)
-    val batch = docs.filter(col("doc_id") % 13 === 0)
+      .unionByName(Seq((1000003L, tieA), (1000007L, tieB)).toDF("doc_id", "text"))
+    val landed = landing.orderBy("doc_id").first().getString(1)
+    val batch = docs.filter(col("doc_id") % 13 === 0).unionByName(Seq(
+      (2000001L, landed), (2000002L, landed), // exact copy of a landing doc, twice in the batch
+      (2000003L, tieA + " iota"), (2000004L, tieB + " ten")).toDF("doc_id", "text"))
     val dir = java.nio.file.Files.createTempDirectory("graft-gate-ix").toString
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     try {
       graft.operators.ShingleIndex.build(corpus, dir, "gix")
-      val (rIx, kIx) = IngestGate.gateBatchIndexed("gix", Some(landing), batch, 0.5)
-      val (rUn, kUn) = IngestGate.gateBatch(corpus.unionAll(landing), batch, 0.5)
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-      assert(rIx.columns.toSeq == rUn.columns.toSeq)
-      assert(canon(rIx) == canon(rUn))
-      assert(canon(kIx.select("doc_id")) == canon(kUn.select("doc_id")))
-    } finally Seq("gix_occ", "gix_sizes", "gix_fp")
+      for ((live, union) <- Seq(Some(landing) -> corpus.unionAll(landing), None -> corpus)) {
+        val (rIx, kIx) = IngestGate.gateBatchIndexed("gix", live, batch, 0.5)
+        val (rUn, kUn) = IngestGate.gateBatch(union, batch, 0.5)
+        assert(rIx.columns.toSeq == rUn.columns.toSeq)
+        assert(canon(rIx) == canon(rUn), s"landing = ${live.isDefined}")
+        assert(canon(kIx.select("doc_id")) == canon(kUn.select("doc_id")))
+      }
+      val r = IngestGate.gateBatchIndexed("gix", Some(landing), batch, 0.5)._1
+        .collect().map(r => r.getLong(0) -> r).toMap
+      assert(r(2000001L).getBoolean(1) && r(2000001L).getBoolean(5))
+      assert(r(2000002L).getLong(2) == 2000001L, "the in-batch copy names its representative")
+      assert(r(2000003L).getLong(2) == 1000003L, "tie: the landing id is lower")
+      assert(r(2000004L).getLong(2) == 1000001L, "tie: the index id is lower")
+    } finally Seq("gix_occ", "gix_sizes", "gix_fp", "gix_sat")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
