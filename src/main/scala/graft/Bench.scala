@@ -1,4 +1,5 @@
 package graft
+import graft.tools.Harness
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with BOTH a cold pass (first execution of
@@ -54,7 +55,7 @@ object Bench {
     * estimator (noise on a fixed-work task only ever ADDS time; the floor
     * is the machine). r13 anchor values are therefore NOT comparable with
     * r10–r12 absolute anchors — the artifact self-describes via
-    * anchor_work. */
+    * anchor_work. (CalibProbe is last in commit 7edabe5.) */
   private[graft] val AnchorRows = 4800000000L
 
   /** The v2 anchor's quiet-host floor reference — derived r14 on an idle
@@ -116,82 +117,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Shuffle-file deletion rides the ContextCleaner; make it synchronous
-      // so a GC-triggered sweep finishes before the next timed query.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.Cpus
+    val spark = Harness.session()
     // Pre-flight: name any testdata schema drift BEFORE 57 queries fail
     // against it with errors three layers from the cause (see r5).
     graft.tools.SchemaCanary.preflight(spark.sparkContext.hadoopConfiguration,
-      Seq(sfDir, "/root/testdata/sf0.001").distinct)
+      Seq(sfDir, Harness.WarmDir).distinct)
     // Warm up the JVM/session once (codegen compiler, parquet reader,
     // shuffle machinery) so the cold pass measures per-query costs, not
     // ~8 s of one-time session start charged to whichever query runs first.
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // Pre-warm every query's GENERATED code at the smallest SF: whole-stage
-    // codegen classes are cached by generated source, which is identical
-    // across SF dirs (paths live in scan metadata, not codegen), so this
-    // one cheap pass pays each query's Janino compile exactly once. Without
-    // it the "cold" numbers measure one-time JVM compilation (e.g. a 20 s
-    // Janino spike on a wide aggregate), not data-scale execution.
-    // Free everything a query run accumulates. Three distinct leaks, all
-    // harness state rather than query cost, all of which made warm passes
-    // measure SLOWER than cold ones (r2: checkpoint blocks; r3 residue on
-    // q_sessionize/q_set_ops/q_semi_join — unchanged code, warm 2-3× cold):
-    //  1. localCheckpoint blocks — dropped by unpersist, but only if it
-    //     BLOCKS: async removal lags into the next query's timed window.
-    //  2. shuffle files + broadcast blocks — unpersist never touches these;
-    //     the ContextCleaner reclaims them only when the driver GCs the
-    //     referencing RDD/broadcast objects. 53 queries/pass without a GC
-    //     means the warm pass runs on the whole cold pass's shuffle garbage.
-    //  3. the SQL cache.
-    // System.gc() here is deliberate and outside every timer: it is what
-    // hands the dead references to the ContextCleaner (blocking-shuffle
-    // config above makes the sweep synchronous). Safe between queries:
-    // every run builds its checkpoints fresh.
-    // Attribution knobs (never set by the driver; default = driver shape):
-    // GRAFT_BENCH_NO_GC skips the between-query System.gc(),
-    // GRAFT_BENCH_GC_SETTLE_MS sleeps after it so the ContextCleaner —
-    // whose reference-queue drain is asynchronous even with the blocking
-    // config (blocking applies to each cleanup CALL, not to when the queue
-    // is processed) — finishes deleting the previous query's shuffle files
-    // OUTSIDE the next query's timed window. Used to decompose the r4
-    // suite-warm drift; see docs/PERF.md.
-    val noGc = sys.env.contains("GRAFT_BENCH_NO_GC")
-    val settleMs = sys.env.getOrElse("GRAFT_BENCH_GC_SETTLE_MS", "0").toLong
-    def dropCheckpointBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.sqlContext.clearCache()
-      if (!noGc) System.gc()
-      if (settleMs > 0) Thread.sleep(settleMs)
-    }
-    // Materialize EVERY output column, not just the row count. Under
-    // `.count()` the optimizer prunes what the action doesn't need —
-    // unused aggregate expressions, final projections (a normalize/regex
-    // query degenerates to counting input rows), and whole left joins
-    // whose right side is unique-keyed (q_substring_cut's reassembly
-    // never ran: its r9 "cost" was only the eager checkpoint firing at
-    // construction). toRdd requires the full schema, so nothing the
-    // query PRODUCES can be optimized away; this is also what a real
-    // consumer (a parquet write, a downstream stage) pays. Round-10
-    // action change — per-query deltas attributed in docs/PERF.md.
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.toRdd.count()
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try materialize(fn(spark, warmDir))
-        catch { case e: Throwable => System.err.println(s"[bench] prewarm $name: ${e.getMessage}") }
-        finally dropCheckpointBlocks() // also on failure: a half-built query leaks blocks too
-      }
+    // every query's generated code, before anything is timed; the passes
+    // below then time Harness.materialize (toRdd: every output column) and
+    // run Harness.drop between queries, outside the timers
+    Harness.prewarm(spark, SparkEntry.queries.keys.toSeq.sorted, "bench")
     // Pre-flight anchor GATE (r12 verdict task 1): two consecutive driver
     // runs shipped unusable artifacts (r11: 36% anchor drift, undetected;
     // r12: 15.2% spread, self-labeled DISCARD) because the end-of-run
@@ -271,7 +211,7 @@ object Bench {
           groupOf(name) = anchors.length - 1
           val t0 = System.nanoTime()
           try {
-            materialize(fn(spark, sfDir))
+            Harness.materialize(fn(spark, sfDir))
             name -> (System.nanoTime() - t0) / 1e9
           } catch {
             case e: Throwable =>
@@ -280,7 +220,7 @@ object Bench {
             // finally, and thus also on failure (a half-built query leaks
             // blocks too); outside the timer either way: block churn is
             // harness state, not query cost
-          } finally dropCheckpointBlocks()
+          } finally Harness.drop(spark)
       }
       Pass(times, anchors.toSeq, groupOf.toMap)
     }
@@ -358,14 +298,14 @@ object Bench {
       }
       val buildSec = timed(graft.operators.ShingleIndex.build(
         d.filter(col("doc_id") % 13 =!= 0), idxDir, "bench_shindex"))
-      dropCheckpointBlocks()
+      Harness.drop(spark)
       val batch = d.filter(col("doc_id") % 13 === 0)
-      val probeColdSec = timed(materialize(
+      val probeColdSec = timed(Harness.materialize(
         graft.operators.ShingleIndex.probe(spark, "bench_shindex", batch)))
-      dropCheckpointBlocks()
-      val probeSec = timed(materialize(
+      Harness.drop(spark)
+      val probeSec = timed(Harness.materialize(
         graft.operators.ShingleIndex.probe(spark, "bench_shindex", batch)))
-      dropCheckpointBlocks()
+      Harness.drop(spark)
       // same split for the persistent IVF index (q_ivf_indexed's scoreboard
       // entry also rebuilds in-query for oracle self-containment)
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -374,21 +314,21 @@ object Bench {
       val ivfBuildSec = timed(graft.operators.IvfIndex.build(
         e, ivfDir, "bench_ivfidx", nCentroids = 8,
         seed = graft.operators.Similarity.ResidueSeed))
-      dropCheckpointBlocks()
+      Harness.drop(spark)
       val queries50 = e.filter(col("vec_id") < 50)
-      val ivfSearchColdSec = timed(materialize(
+      val ivfSearchColdSec = timed(Harness.materialize(
         graft.operators.IvfIndex.search(spark, "bench_ivfidx", queries50)))
-      dropCheckpointBlocks()
-      val ivfSearchSec = timed(materialize(
+      Harness.drop(spark)
+      val ivfSearchSec = timed(Harness.materialize(
         graft.operators.IvfIndex.search(spark, "bench_ivfidx", queries50)))
-      dropCheckpointBlocks()
+      Harness.drop(spark)
       // append alone (the q_dedup_index_append scoreboard entry rebuilds
       // build+append+probe in-query for oracle self-containment; the
       // deployment cost of admitting a batch into the index is just this)
       val appendSec = timed(graft.operators.ShingleIndex.append(
         spark, "bench_shindex", idxDir,
         batch.select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))))
-      dropCheckpointBlocks()
+      Harness.drop(spark)
       Seq("q_dedup_indexed_build" -> buildSec,
         "q_dedup_indexed_probe_cold" -> probeColdSec,
         "q_dedup_indexed_probe" -> probeSec,

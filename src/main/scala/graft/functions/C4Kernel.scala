@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.operators.TextAnalysis.c4CleanOnAlgebra]], kept as the
   * executable specification) computed in ONE walk per document.
   *
-  * Why (RulesProfile, 5M docs, docs/PERF.md r13): the column-algebra form
-  * builds the verdict from higher-order-function lambdas, which get NO
-  * common-subexpression elimination — the keep predicate and the
+  * Why (RulesProfile, last in commit 7edabe5; 5M docs, docs/PERF.md r13): the
+  * column-algebra form builds the verdict from higher-order-function lambdas,
+  * which get NO common-subexpression elimination — the keep predicate and the
   * clean_text projection each re-ran the whole lambda chain, and Gopher's
   * downstream columns re-ran it again. A struct-returning native
   * expression is evaluated once per consumer SITE (filter + project ≈

@@ -151,10 +151,10 @@ object InvoiceParser {
     * (ref: robot/core/parser.py:134-208).
     *
     * Marker hits come from [[ParserScan.findMarkerHits]] — one folded-char
-    * prefilter scan instead of 12 whole-document NFA passes (ParseProfile:
-    * this was 52.6 of the parse's 109 µs/doc); the hit sequence is already
-    * in the reference's (position, marker-table) order. The original
-    * 12-matcher loop survives as [[extractBlocksReference]], and
+    * prefilter scan instead of 12 whole-document NFA passes (ParseProfile, last
+    * in commit 7edabe5: this was 52.6 of the parse's 109 µs/doc); the hit
+    * sequence is already in the reference's (position, marker-table) order. The
+    * original 12-matcher loop survives as [[extractBlocksReference]], and
     * ParserScanSpec differential-tests the two on adversarial casings and
     * the real corpus. */
   def extractBlocks(text: String): Map[String, String] =

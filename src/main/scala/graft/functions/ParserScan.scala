@@ -5,7 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Prefilter scans for the parser's hot regex passes.
   *
-  * ParseProfile attribution (sf0.1, single thread): extractBlocks was
+  * ParseProfile attribution (sf0.1, single thread; the probe is last in
+  * commit 7edabe5): extractBlocks was
   * 52.6 µs/doc of the 109 µs/doc parse — twelve `(?iu)` marker patterns
   * each driving the java.util.regex NFA over the whole document. The
   * markers all start with two fixed literal ASCII letters, so a single

@@ -132,7 +132,8 @@ object BlockSegmentation {
   def query(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     // presentation sort BEFORE the nondeterministic kernel UDF — a final
     // orderBy makes the range sampling job re-run the whole chain (the
-    // InvoicePipeline.query rationale; measured there with PipelineSlices)
+    // InvoicePipeline.query rationale; measured there with PipelineSlices, last
+    // in commit 7edabe5)
     InvoicePipeline.syntheticCorpus(spark, dir, spread = false)
       .orderBy("doc_id")
       .withColumn("__graft_c", normalizeAndCountLines(col("text")))

@@ -172,15 +172,15 @@ object BloomDedup {
     * ONE md5 per document and the UDF parses the two 52-bit halves and
     * runs the k-probe loop in JVM — zero shuffle.
     *
-    * Why the UDF takes the hex digest and not the [[positions]] array:
-    * UDF input projections are evaluated WITHOUT common-subexpression
-    * elimination, so handing the UDF the position-array expression
-    * re-evaluates the md5 under every array element (measured 8–9 s vs
-    * 5 s for k independent hashes vs 2 s for this form, at 500k docs —
-    * `tools/BloomHashAB`). Rule: feed UDFs pre-reduced scalars; CSE does
-    * not reach what a UDF consumes. The K-M arithmetic is duplicated
-    * here in JVM form — a divergence from [[positions]] would surface as
-    * false NEGATIVES, which the spec and the scale probe both pin. */
+    * Why the UDF takes the hex digest and not the [[positions]] array: UDF
+    * input projections are evaluated WITHOUT common-subexpression elimination,
+    * so handing the UDF the position-array expression re-evaluates the md5
+    * under every array element (measured 8–9 s vs 5 s for k independent hashes
+    * vs 2 s for this form, at 500k docs — BloomHashAB, a probe last in commit
+    * 7edabe5). Rule: feed UDFs pre-reduced scalars; CSE does not reach what a
+    * UDF consumes. The K-M arithmetic is duplicated here in JVM form — a
+    * divergence from [[positions]] would surface as false NEGATIVES, which the
+    * spec and the scale probe both pin. */
   def gate(spark: SparkSession, arrivals: DataFrame, filter: Array[Long],
            k: Int = DefaultHashes, m: Int = DefaultBits): DataFrame = {
     val bc = spark.sparkContext.broadcast(filter)

@@ -107,11 +107,12 @@ object BucketedMaintenance {
                              afterRelist: String => Unit = _ => ()): Unit =
     tables.foreach { case (t, bucketCol) =>
       // REFRESH before reading: appends may have come from another session
-      // (streaming foreachBatch runs in a cloned session) and this
-      // session's cached file listing would not include them — a compact
-      // over a stale listing would rewrite the stale subset and then
-      // delete the directory holding the unseen files. Found live by
-      // StreamBench's vecgate census (index frozen while landing grew).
+      // (streaming foreachBatch runs in a cloned session) and this session's
+      // cached file listing would not include them — a compact over a stale
+      // listing would rewrite the stale subset and then delete the directory
+      // holding the unseen files. Found live by the vecgate census of
+      // StreamBench, a probe last in commit 7edabe5 (index frozen while landing
+      // grew).
       spark.catalog.refreshTable(t)
       val meta = spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(t))

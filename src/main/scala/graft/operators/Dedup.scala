@@ -237,10 +237,7 @@ HAVING CAST(COUNT(*) AS DOUBLE) / CAST(a.sh_count + b.sh_count - COUNT(*) AS DOU
       .agg(min(col("dst")).as("mn"))
       .select(col("src").as("id"), least(col("src"), col("mn")).as("label"))
       .persist()
-    val tInit = System.nanoTime()
     labels.count() // materialize the base relation once
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] init (edges+labels): ${(System.nanoTime() - tInit) / 1e9}%.3f s")
     var prevCached = labels
     var changed = 1L
     var rounds = 0
@@ -261,10 +258,7 @@ HAVING CAST(COUNT(*) AS DOUBLE) / CAST(a.sh_count + b.sh_count - COUNT(*) AS DOU
           // each id has exactly one self row — its current label
           max(when(col("self"), col("label"))).as("label"))
         .persist()
-      val t0 = System.nanoTime()
       changed = updated.filter(col("new_label") < col("label")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $rounds: ${(System.nanoTime() - t0) / 1e9}%.3f s, changed=$changed")
       prevCached.unpersist(blocking = false)
       prevCached = updated
       labels = updated.select(col("id"), col("new_label").as("label"))
@@ -659,7 +653,8 @@ ORDER BY f.doc_id
     * needs ≥2 CONSECUTIVE outliers between them in sorted-id order —
     * [[cappedBucketEdges]]' connectivity property, pinned in
     * OperatorsSpec and measured on a constructed just-over-cap bucket in
-    * tools/ChainRecallProbe. The default cap is inert at oracle scale
+    * ChainRecallProbe (it and PipelineEndToEnd are last in commit
+    * 7edabe5). The default cap is inert at oracle scale
     * (1000 > any sf≤0.1 bucket), so `q_minhash_dedup` is unchanged — the
     * [[DefaultMaxShingleDf]] discipline. */
   val DefaultMaxBandBucket = 1000
@@ -671,8 +666,7 @@ ORDER BY f.doc_id
     * no `maxStride` CONSECUTIVE ids of the sorted array are all outside S
     * (i.e. runs of < maxStride interleaved non-members never disconnect
     * members). `ids` must be sorted ascending. maxStride=1 is the r13
-    * chain, kept reachable so ChainRecallProbe can measure what stride 2
-    * buys. */
+    * chain, kept reachable to measure what stride 2 buys. */
   private[graft] def cappedBucketEdges(ids: Array[Long],
       maxStride: Int = 2): Iterator[(Long, Long)] =
     Iterator.range(1, maxStride + 1).flatMap(s =>

@@ -217,9 +217,9 @@ object Imi {
   // correlated. Adversarially correlated halves (e.g. right = copy of
   // left) collapse the populated product cells toward the diagonal —
   // k1² cells behave like k1 — and the multi-probe budget buys far less
-  // (measured in graft.tools.ImiAdversarialProbe). The standard public
-  // fix (Ge et al., CVPR 2013 "Optimized Product Quantization"; the
-  // cheap seeded form is the randomized Hadamard transform of
+  // (measured by ImiAdversarialProbe, last in commit 7edabe5; SCALING.md). The
+  // standard public fix (Ge et al., CVPR 2013 "Optimized Product Quantization";
+  // the cheap seeded form is the randomized Hadamard transform of
   // Ailon–Chazelle 2006) rotates the space ahead of the half-split so
   // each half sees a global mix of dimensions.
   //

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *      corpus scale the planner read those estimates, chose
   *      BroadcastHashJoin(BuildLeft) on the PAIRS side, and the
   *      broadcast build ran a 24 GB driver out of memory — measured by
-  *      ScaleProbe, the exact failure a real cluster would hit (AQE
-  *      never demotes a statically planned broadcast, so the
+  *      ScaleProbe (last in commit 7edabe5), the exact failure a real cluster
+  *      would hit (AQE never demotes a statically planned broadcast, so the
   *      underestimate is unrecoverable). The checkpoint therefore goes
   *      through [[org.apache.spark.sql.graft.CheckpointShim]], which
   *      DROPS the bogus origin stats: statically every downstream join

@@ -159,10 +159,10 @@ object InvoicePipeline {
     * sampling job re-execute the whole nondeterministic-UDF chain (the
     * single-evaluation marker that stops projection duplication also
     * stops the sample pass from pruning the parse — measured +5 s of the
-    * query's 12.5 s at sf0.1, PipelineSlices). Sorting the corpus costs
-    * one shuffle of the cheap construction instead, and every downstream
-    * stage ([[process]] + the projection) is a narrow per-row map, so
-    * the output order is identical. */
+    * query's 12.5 s at sf0.1, PipelineSlices, last in commit 7edabe5). Sorting
+    * the corpus costs one shuffle of the cheap construction instead, and every
+    * downstream stage ([[process]] + the projection) is a narrow per-row map,
+    * so the output order is identical. */
   def query(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = syntheticCorpus(spark, sfDir, spread = false).orderBy("doc_id")
     val out = process(corpus)

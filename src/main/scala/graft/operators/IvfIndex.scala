@@ -225,14 +225,15 @@ object IvfIndex {
 
   /** Rebuild when the corpus has outgrown the model: search cost is
     * O(batch × n·nprobe/c), so at a FIXED c the index "de-indexes" as n
-    * grows — measured in StreamBench's vecgate tier, where batch time
-    * doubles as appends double the corpus under the build-time cell
-    * count. Policy: retrain (with the auto √n rule and current default
-    * seed) when [[Similarity.cellsFor]] of the stored count reaches
-    * `growthFactor` × the stored model's cells — the [[ShingleIndex.rebuildIfNeeded]]
-    * analog, gated by a census that costs two tiny counts. Returns true
-    * iff a rebuild ran. The index contents are materialized (checkpoint)
-    * before the rebuild because build drops the table it would otherwise
+    * grows — measured in the vecgate tier of StreamBench (a probe last
+    * in commit 7edabe5), where batch time doubles as appends double the
+    * corpus under the build-time cell count. Policy: retrain (with the auto √n
+    * rule and current default seed) when [[Similarity.cellsFor]] of the stored
+    * count reaches `growthFactor` × the stored model's cells — the
+    * [[ShingleIndex.rebuildIfNeeded]] analog, gated by a census that costs two
+    * tiny counts. Returns true iff a rebuild ran. The index contents are
+    * materialized (checkpoint) before the rebuild because build drops the table
+    * it would otherwise
     * still be reading. */
   def rebuildIfNeeded(spark: SparkSession, tag: String, path: String,
                       buckets: Int = 0, growthFactor: Double = 2.0,
@@ -337,6 +338,20 @@ object IvfIndex {
       PqModel(books, rot.map(Imi.rotSigns(_)), k, rows.head.getBoolean(6))
     }
 
+  /** The first `n` cells for query vector `v`, ranked by (dist2 ASC,
+    * cid ASC) — the pinned tie-break every search tier and its oracle
+    * share. */
+  private def rankCells(v: Array[Float], cents: Array[Array[Double]], n: Int): Iterator[Int] =
+    Array.tabulate(cents.length)(c => (Similarity.dist2P(v, cents(c)), c))
+      .sorted.iterator.take(n).map(_._2)
+
+  /** The distinct cell ids of `df` (≤ queries × nprobe ints — probe
+    * metadata, not data) for a literal IN on the bucketed scan. One
+    * collect job, deduplicated on the driver: a `distinct()` in the plan
+    * would add an exchange job for the same list. */
+  private def cellsOf(df: DataFrame): Seq[Int] =
+    df.select("cid").collect().map(_.getInt(0)).distinct.toSeq
+
   /** Top-k cosine neighbors for `queries` (`vec_id`, `embedding`) against
     * the stored corpus. Output contract = [[Similarity.ivfSearch]]:
     * `(query_id, rk, neighbor_id, cos)`, same-id matches excluded by
@@ -366,17 +381,14 @@ object IvfIndex {
       queries.select(col("vec_id"), col("embedding"))
         .as[(Long, Array[Float])]
         .flatMap { case (id, v) =>
-          Array.tabulate(cents.length)(c => (Similarity.dist2P(v, cents(c)), c))
-            .sorted // (dist2 ASC, cid ASC) — the pinned tie-break
-            .iterator.take(math.max(1, np))
-            .map { case (_, cid) => (id, cid, v, Similarity.normP(v)) }
+          rankCells(v, cents, math.max(1, np))
+            .map(cid => (id, cid, v, Similarity.normP(v)))
         }
         .toDF("query_id", "cid", "vq", "nq"))
     // literal IN over the batch's probed cells → bucket pruning: the scan
     // opens only the probed cells' buckets (IvfIndexSpec pins
-    // SelectedBucketsCount < total). The collect is ≤ queries × nprobe
-    // ints — probe metadata, not data.
-    val probedCells = probes.select("cid").distinct().as[Int].collect().toSeq
+    // SelectedBucketsCount < total)
+    val probedCells = cellsOf(probes)
     val joined = spark.table(assignTable(tag))
       .filter(col("cid").isin(probedCells: _*))
       .join(probes, "cid")
@@ -432,13 +444,11 @@ object IvfIndex {
         .flatMap { case (id, v) =>
           val q = Similarity.quantizeVec(v)
           val na = math.sqrt(Similarity.dotI(q, q).toDouble)
-          Array.tabulate(cents.length)(c => (Similarity.dist2P(v, cents(c)), c))
-            .sorted
-            .iterator.take(math.max(1, np))
-            .map { case (_, cid) => (id, cid, q, na, v, Similarity.normP(v)) }
+          rankCells(v, cents, math.max(1, np))
+            .map(cid => (id, cid, q, na, v, Similarity.normP(v)))
         }
         .toDF("query_id", "cid", "qa", "na", "vq", "nq"))
-    val probedCells = probes.select("cid").distinct().as[Int].collect().toSeq
+    val probedCells = cellsOf(probes)
     graft.plans.DotInt8.ensureRegistered(spark)
     // explicit narrow select BEFORE the join: the int8 stage's point is
     // that the scan never reads the float vectors
@@ -483,7 +493,7 @@ object IvfIndex {
       scored8.withColumn("rw", row_number().over(wWide))
         .filter(col("rw") <= k * widen)
         .select("query_id", "neighbor_id", "cid"))
-    val wideCells = wide.select("cid").distinct().as[Int].collect().toSeq
+    val wideCells = cellsOf(wide)
     val floats = spark.table(assignTable(tag))
       .select(col("vec_id").as("neighbor_id"), col("cid"), col("embedding"), col("nrm"))
       .filter(col("cid").isin(wideCells: _*))
@@ -562,11 +572,9 @@ object IvfIndex {
       queries.select(col("vec_id"), col("embedding"))
         .as[(Long, Array[Float])]
         .flatMap { case (id, v) =>
-          Array.tabulate(cents.length)(c => (Similarity.dist2P(v, cents(c)), c))
-            .sorted // (dist2 ASC, cid ASC) — the pinned tie-break
-            .iterator.take(math.min(cents.length, step * rounds))
+          rankCells(v, cents, math.min(cents.length, step * rounds))
             .zipWithIndex
-            .map { case ((_, cid), r0) => (id, cid, r0 / step + 1) }
+            .map { case (cid, r0) => (id, cid, r0 / step + 1) }
         }
         .toDF("query_id", "cid", "round"))
     val qvecs = ck.statsHonestLocalCheckpoint(
@@ -580,7 +588,7 @@ object IvfIndex {
         case Some(ids) => base.filter(col("query_id").isin(ids: _*))
         case None => base
       }
-      val cells = probes.select("cid").distinct().as[Int].collect().toSeq
+      val cells = cellsOf(probes)
       if (cells.isEmpty)
         return Seq.empty[(Long, Long, Double)]
           .toDF("query_id", "neighbor_id", "cos")
@@ -696,20 +704,16 @@ object IvfIndex {
         queries.select(col("vec_id"), col("embedding"))
           .as[(Long, Array[Float])]
           .flatMap { case (id, v) =>
-            Array.tabulate(cents.length)(c => (Similarity.dist2P(v, cents(c)), c))
-              .sorted // (dist2 ASC, cid ASC) — the pinned tie-break
-              .iterator.take(math.max(1, np))
-              .map { case (_, cid) => (id, cid, Pq.coarseDot(v, cents(cid))) }
+            rankCells(v, cents, math.max(1, np))
+              .map(cid => (id, cid, Pq.coarseDot(v, cents(cid))))
           }
           .toDF("query_id", "cid", "qc")
       else
         queries.select(col("vec_id"), col("embedding"))
           .as[(Long, Array[Float])]
           .flatMap { case (id, v) =>
-            Array.tabulate(cents.length)(c => (Similarity.dist2P(v, cents(c)), c))
-              .sorted // (dist2 ASC, cid ASC) — the pinned tie-break
-              .iterator.take(math.max(1, np))
-              .map { case (_, cid) => (id, cid) }
+            rankCells(v, cents, math.max(1, np))
+              .map(cid => (id, cid))
           }
           .toDF("query_id", "cid"))
     val qtabs = org.apache.spark.sql.graft.CheckpointShim.statsHonestLocalCheckpoint(
@@ -719,7 +723,7 @@ object IvfIndex {
           (id, Pq.adcTable(v, books, signs), Similarity.normP(v), v)
         }
         .toDF("query_id", "tab", "nq", "vq"))
-    val probedCells = probes.select("cid").distinct().as[Int].collect().toSeq
+    val probedCells = cellsOf(probes)
     graft.plans.AdcLookup.ensureRegistered(spark)
     // explicit narrow select BEFORE the join: the ADC tier's point is that
     // the candidate scan reads neither the float vectors nor the int8 codes
@@ -758,7 +762,7 @@ object IvfIndex {
       scored.withColumn("rw", row_number().over(wWide))
         .filter(col("rw") <= k * widen)
         .select("query_id", "neighbor_id", "cid"))
-    val wideCells = wide.select("cid").distinct().as[Int].collect().toSeq
+    val wideCells = cellsOf(wide)
     val floats = spark.table(assignTable(tag))
       .select(col("vec_id").as("neighbor_id"), col("cid"), col("embedding"), col("nrm"))
       .filter(col("cid").isin(wideCells: _*))
@@ -822,7 +826,7 @@ object IvfIndex {
           "cos, neighbor_id, cast(cid as bigint))").as("b"))
         .select(col("query_id"), col("b.id").as("neighbor_id"),
           col("b.payload").cast("int").as("cid")))
-    val cells = best.select("cid").distinct().as[Int].collect().toSeq
+    val cells = cellsOf(best)
     val floats = spark.table(assignTable(tag))
       .select(col("vec_id").as("neighbor_id"), col("cid"), col("embedding"), col("nrm"))
       .filter(col("cid").isin(cells: _*))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * they are the streaming-gate workload (arrivals are new vectors), and
   * (b) they keep the natural ceiling at the random-pair level σ ≈ 1/√dim
   * — a CORPUS query's sign-masked replicas (the scale corpus is
-  * block-replicated, [[graft.tools.ScaleProbe]]) form a cross-block
+  * block-replicated, [[graft.tools.ScaleCorpus]]) form a cross-block
   * cosine tail that grows like √(2·ln blocks)·σ_mask and would swamp any
   * planted band by ~10⁴ blocks (measured: ceiling 0.51 at 1×, 0.64 at
   * 30× for corpus queries vs ≈0.5 flat for synthetic ones).
@@ -36,9 +36,9 @@ import org.apache.spark.sql.functions._
   * exact per-block maxima; the unseen tail is bounded by their
   * distribution and the margin is reported with every estimate).
   *
-  * Validation contract (RecallEstimatorSpec + DeepScaleProbe `plant`
-  * tier): at sub-cap scale, (a) the margin is positive, (b) exact
-  * brute-force top-k over the planted corpus per query IS the planted
+  * Validation contract (RecallEstimatorSpec + DeepScaleProbe's `plant` tier,
+  * last in commit 7edabe5): at sub-cap scale, (a) the margin is positive, (b)
+  * exact brute-force top-k over the planted corpus per query IS the planted
   * set, and (c) index recall measured against exact truth equals recall
   * measured against the planted set — the estimator is then applied at
   * 5M/10M/20M where only it can go.
@@ -157,7 +157,7 @@ object RecallEstimator {
   /** EXACT full-corpus top-k for CORPUS queries over a sign-mask
     * block-replicated corpus — the natural-band truth factory past the
     * exact cap (round-9 verdict item 1). The replicated corpus
-    * ([[graft.tools.ScaleProbe.generateEmbeddings]]) stores block b's
+    * ([[graft.tools.ScaleCorpus.generateEmbeddings]]) stores block b's
     * copy of base vector w as s_b∘w, and sign masks commute through the
     * dot product EXACTLY (float sign flips are exact, the accumulation
     * order is unchanged): cos(q, s_b∘w) = cos(s_b∘q, w). So the true
@@ -175,13 +175,13 @@ object RecallEstimator {
     * = base id + b·stride (block 0 keeps base ids), self excluded like
     * `excludeSelf = true` search.
     *
-    * `maskOf(block, dim)` is called with a 1-BASED dim index — the
-    * convention of the generator's `element_at` masking
-    * ([[graft.tools.ScaleProbe.generateEmbeddings]] multiplies dim i ∈
-    * 1..D by sign(b, i)); a 0-based caller would probe a DIFFERENT
-    * corpus than the one on disk, which is exactly what the under-cap
-    * quadratic validation leg in DeepScaleProbe exists to catch (and
-    * did, round 10). */
+    * `maskOf(block, dim)` is called with a 1-BASED dim index — the convention
+    * of the generator's `element_at` masking
+    * ([[graft.tools.ScaleCorpus.generateEmbeddings]] multiplies dim i ∈ 1..D by
+    * sign(b, i)); a 0-based caller would probe a DIFFERENT corpus than the one
+    * on disk, which is exactly what the under-cap quadratic validation leg in
+    * DeepScaleProbe (last in commit 7edabe5) existed to catch (and did, round
+    * 10). */
   def blockStratumTopK(base: DataFrame, queryIds: Seq[Long], blocks: Int,
                        blockStride: Long, k: Int,
                        maskOf: (Int, Int) => Float): Map[Long, Seq[(Long, Double)]] = {

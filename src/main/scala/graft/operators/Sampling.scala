@@ -487,11 +487,11 @@ ORDER BY d.doc_id
     * C4 clean (downstream consumes clean_text) → Gopher verdict.
     *
     * The C4-survivor boundary is MATERIALIZED (round 13; profiled by
-    * tools/RulesProfile at 5M docs): C4's line pipeline is built from
-    * higher-order-function lambdas, which get NO common-subexpression
-    * elimination — the keep predicate and the clean_text projection each
-    * re-ran the whole lambda chain (19.4 s of clean → 48.6 s once
-    * filtered+projected), and Gopher's metric columns re-ran it again
+    * RulesProfile at 5M docs, a probe last in commit 7edabe5): C4's line
+    * pipeline is built from higher-order-function lambdas, which get NO
+    * common-subexpression elimination — the keep predicate and the clean_text
+    * projection each re-ran the whole lambda chain (19.4 s of clean → 48.6 s
+    * once filtered+projected), and Gopher's metric columns re-ran it again
     * (→ 104–111 s). Checkpointing the ~8% survivors runs C4 exactly once
     * and Gopher reads stored rows — the Spark twin of the r12
     * `q_curation_rules` learnedTail fix, one stage earlier. Semantics

@@ -80,8 +80,8 @@ object ShingleIndex {
     // append to an EXISTING table through its catalog location — after a
     // [[compact]] the table lives in a generation dir, and re-pinning the
     // original path would analysis-error on the mismatch (found by
-    // StreamBench's per-batch-compaction cadence). Overwrite (build/
-    // rebuild) deliberately re-pins the canonical path.
+    // the per-batch-compaction cadence of StreamBench, last in commit 7edabe5).
+    // Overwrite (build/ rebuild) deliberately re-pins the canonical path.
     if (mode == SaveMode.Append && df.sparkSession.catalog.tableExists(table))
       w.saveAsTable(table)
     else {

@@ -492,8 +492,9 @@ FROM scored WHERE cos >= $threshold ORDER BY id_a, id_b
   }
 
   /** Probe width for a `cells`-cell index — the recall-floor rule the
-    * fixed default lacked (measured in IvfNprobeFrontier: at fixed
-    * nprobe 8 under √n cells, recall@5 fell 0.576 → 0.392 → 0.324 → 0.248
+    * fixed default lacked (measured in IvfNprobeFrontier, last in commit
+    * 7edabe5: at fixed nprobe 8 under √n cells, recall@5 fell 0.576 →
+    * 0.392 → 0.324 → 0.248
     * across 1×/10×/30×/100× because the probed CELL fraction fell with n).
     * `⌈2·√cells⌉` (floored at 8, capped at cells) holds measured recall@5
     * in a ≥0.55 band across FIVE scale points spanning three decades
@@ -571,8 +572,9 @@ FROM scored WHERE cos >= $threshold ORDER BY id_a, id_b
     * sample order is pinned by vec_id, so the seed is fully deterministic. */
   final case class FarthestPointSeed(sampleCap: Int = 1 << 14) extends IvfSeed
   /** Mode-resolved default: the AUTO path (nCentroids=0 → [[cellsFor]])
-    * uses [[FarthestPointSeed]] — measured in IvfScaleProbe (r6): at equal
-    * 2-round cost it lifts recall@5 at both probed scales (1×: 0.552 →
+    * uses [[FarthestPointSeed]] — measured in IvfScaleProbe (r6; last in
+    * commit 7edabe5): at equal 2-round cost it lifts recall@5 at both
+    * probed scales (1×: 0.552 →
     * 0.576; 10×: 0.360 → 0.408) while extra Lloyd rounds cost 1.5–3× time
     * for smaller gains — EXCEPT past the farthest-first driver guard
     * (4096 cells), where the auto path falls back to [[ResidueSeed]]

@@ -555,10 +555,10 @@ FROM m ORDER BY doc_id
 
   /** The pre-r13 column-algebra form of [[c4CleanOn]] — kept verbatim as
     * the EXECUTABLE SPECIFICATION the fused kernel is differential-pinned
-    * against (the normalizeTextReference discipline). Not on any hot
-    * path: its HOF lambdas get no common-subexpression elimination, so a
-    * filter+projection consumer re-runs the whole chain per site
-    * (RulesProfile, docs/PERF.md r13). */
+    * against (the normalizeTextReference discipline). Not on any hot path: its
+    * HOF lambdas get no common-subexpression elimination, so a
+    * filter+projection consumer re-runs the whole chain per site (RulesProfile,
+    * last in commit 7edabe5; docs/PERF.md r13). */
   private[graft] def c4CleanOnAlgebra(df: DataFrame, textCol: Column,
                                       badWords: Seq[String] = Nil): DataFrame = {
     // NULL behaves like '' (the repo-wide convention — see [[repetition]]):

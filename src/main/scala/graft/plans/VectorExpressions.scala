@@ -54,7 +54,8 @@ object VectorKernels {
   * [[graft.operators.IvfIndex.search]] / [[graft.operators.ImiIndex.search]]
   * evaluates one dot per (query, neighbor) candidate pair — the single
   * largest term in the streaming vector gate's per-batch wall (StreamBench
-  * r7 attribution). As a typed Dataset `.map` that cost an Encoder
+  * r7 attribution; the probe is last in commit 7edabe5). As a typed
+  * Dataset `.map` that cost an Encoder
   * deserialization of BOTH 64-float vectors per pair plus a norm
   * recomputation of the stored side; as a native expression the scoring
   * stays inside whole-stage codegen reading [[ArrayData]] in place.

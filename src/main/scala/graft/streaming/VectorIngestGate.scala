@@ -25,18 +25,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    `nprobe = 0` resolves per REGIME, because the two uses of the gate
   *    have different geometry:
   *      - `threshold ≥` [[DupGateThreshold]] (duplicate gating): a match
-  *        at cos ≥ 0.99 is a near-copy, and a near-copy of a stored
-  *        vector quantizes like the stored vector — an EXACT copy lands
-  *        in the same argmin cell deterministically, a 0.999-copy can
-  *        only cross to a cell whose boundary it already straddles. A
-  *        small fixed probe ([[DupGateNprobe]]) therefore keeps dup
-  *        recall, at any corpus size. Measured at 2M vectors
-  *        (StreamBench, 1000× corpus, τ=0.999): nprobe 8 produces
-  *        VERDICT-IDENTICAL landings to the full recall rule (7,200 =
-  *        7,200 of 8,000) while the batch wall drops ~30 s → 6.7–8.8 s
-  *        per 2,000-vector batch — the rule's ≈2·n^(3/4) candidate
-  *        volume buys nothing here because dup matches are not generic
-  *        neighbors (SCALING.md r7 deep-scale section).
+  *        at cos ≥ 0.99 is a near-copy, and a near-copy of a stored vector
+  *        quantizes like the stored vector — an EXACT copy lands in the same
+  *        argmin cell deterministically, a 0.999-copy can only cross to a cell
+  *        whose boundary it already straddles. A small fixed probe
+  *        ([[DupGateNprobe]]) therefore keeps dup recall, at any corpus size.
+  *        Measured at 2M vectors (StreamBench, last in commit 7edabe5; 1000×
+  *        corpus, τ=0.999): nprobe 8 produces VERDICT-IDENTICAL landings to the
+  *        full recall rule (7,200 = 7,200 of 8,000) while the batch wall drops
+  *        ~30 s → 6.7–8.8 s per 2,000-vector batch — the rule's ≈2·n^(3/4)
+  *        candidate volume buys nothing here because dup matches are not
+  *        generic neighbors (SCALING.md r7 deep-scale section).
   *      - `threshold <` [[DupGateThreshold]] (semantic gating): matches
   *        are genuine nearest-neighbor queries, so the default is
   *        [[graft.operators.Similarity.nprobeFor]] of the stored model —
@@ -65,16 +64,16 @@ object VectorIngestGate {
 
   /** Probe width of the dup-gate regime — fixed, corpus-size-independent;
     * verdict-identical to the full recall rule at 2M vectors (measured,
-    * SCALING.md r7) with cell-boundary headroom beyond the argmin cell an
-    * exact copy provably shares. The r7 A/B's arrivals were exact copies
-    * and near-orthogonal scrambles only; the round-8 advisor follow-up
-    * (DupGateNearCopyProbe, SCALING.md r8) measured PERTURBED near-copies
-    * across the whole dup band — cos 0.9995 / 0.996 / 0.992 at 2M
-    * vectors, 1,414 cells: dup recall 1.0000 and verdict agreement
-    * 1.0000 with the rule at every band, at ~3–4× the throughput. The
-    * fixed budget's geometric argument (a near-copy quantizes like its
-    * stored source; boundary-straddlers are covered by the 8-cell
-    * headroom) holds for real perturbed copies, not just exact ones. */
+    * SCALING.md r7) with cell-boundary headroom beyond the argmin cell an exact
+    * copy provably shares. The r7 A/B's arrivals were exact copies and
+    * near-orthogonal scrambles only; the round-8 advisor follow-up
+    * (DupGateNearCopyProbe, last in commit 7edabe5; SCALING.md r8) measured
+    * PERTURBED near-copies across the whole dup band — cos 0.9995 / 0.996 /
+    * 0.992 at 2M vectors, 1,414 cells: dup recall 1.0000 and verdict agreement
+    * 1.0000 with the rule at every band, at ~3–4× the throughput. The fixed
+    * budget's geometric argument (a near-copy quantizes like its stored source;
+    * boundary-straddlers are covered by the 8-cell headroom) holds for real
+    * perturbed copies, not just exact ones. */
   val DupGateNprobe = 8
 
   /** `nprobe = 0` resolution for a gate at `threshold` (0 passes through
@@ -165,7 +164,7 @@ object VectorIngestGate {
     // stored copy answers at cos 1 ≥ any threshold, whereas an arrival
     // that merely COLLIDES with a stored vec_id (different embedding — a
     // caller-contract violation the bench itself once armed: synthetic ids
-    // straddling a ScaleProbe block range) must not be silently swallowed.
+    // straddling a ScaleCorpus block range) must not be silently swallowed.
     // Below the threshold such a collision is treated as fresh; the id
     // uniqueness of admitted vectors remains the caller's contract.
     val ids = arrivals.select("vec_id").limit(MaxBatchVectors + 1).collect().map(_.get(0))
@@ -283,26 +282,17 @@ ORDER BY a.vec_id
   def start(indexTag: String, stream: DataFrame,
             landingDir: String, receiptsDir: String, checkpointDir: String,
             threshold: Double = 0.92, nprobe: Int = 0,
-            verbose: Boolean = false, tier: ScoreTier = FloatTier): StreamingQuery =
+            tier: ScoreTier = FloatTier): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          // phase attribution (verbose): "gate" pays the probe search once
-          // (gateBatch collects the verdicts, so the three consumers below
-          // never re-run it), the two writes and the append then read the
-          // local receipts and the arrivals
-          def phase[A](name: String)(f: => A): A = {
-            val t0 = System.nanoTime()
-            val r = f
-            if (verbose) println(
-              f"[vecgate] batch $batchId $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            r
-          }
-          val (receipts, kept) =
-            phase("gate")(gateBatch(indexTag, batch, threshold, nprobe, tier))
+          // gateBatch collects the verdicts, so the three consumers below
+          // never re-run the probe search: the two writes and the append
+          // read the local receipts and the arrivals
+          val (receipts, kept) = gateBatch(indexTag, batch, threshold, nprobe, tier)
           // landing/receipts are partitioned by batch_id and written with
           // DYNAMIC partition overwrite: a replayed attempt overwrites
           // its OWN partition instead of appending duplicates, so the
@@ -315,17 +305,15 @@ ORDER BY a.vec_id
           val prev = spark.conf.getOption(pmKey)
           spark.conf.set(pmKey, "dynamic")
           try {
-            phase("receipts")(
-              receipts.withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").partitionBy("batch_id").parquet(receiptsDir))
-            phase("landing")(
-              kept.withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").partitionBy("batch_id").parquet(landingDir))
+            receipts.withColumn("batch_id", lit(batchId))
+              .write.mode("overwrite").partitionBy("batch_id").parquet(receiptsDir)
+            kept.withColumn("batch_id", lit(batchId))
+              .write.mode("overwrite").partitionBy("batch_id").parquet(landingDir)
           } finally prev match {
             case Some(v) => spark.conf.set(pmKey, v)
             case None    => spark.conf.unset(pmKey)
           }
-          phase("index-append")(IvfIndex.assignInto(spark, indexTag, kept))
+          IvfIndex.assignInto(spark, indexTag, kept)
         }
       }
       .start()

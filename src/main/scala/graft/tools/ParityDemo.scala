@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.functions.{InvoiceParser, Normalizer}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end smoke driver: runs the normalize→parse→validate parity core as
@@ -10,15 +9,7 @@ import org.apache.spark.sql.functions._
 object ParityDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-parity-demo")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(_.withExtensions(new graft.plans.GraftExtensions))
     import spark.implicits._
 
     // 1. Column-algebra normalization over the real documents table.

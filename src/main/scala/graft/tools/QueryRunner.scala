@@ -1,11 +1,16 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Run one named SparkEntry query repeatedly and print per-run wall time +
   * row count — the single-query iteration loop for plan/perf work
-  * (Bench runs everything; this isolates one).
+  * (Bench runs everything; this isolates one). It runs on [[Harness]],
+  * like graft.Bench: same session basis (SPARK_GRAFT_CPUS, default 4),
+  * codegen prewarmed at the smallest SF, the drop between runs and the
+  * toRdd action, so an isolated number compares with the scoreboard's.
+  *
+  * Also the way to re-run a scale point: generate a corpus with
+  * [[ScaleCorpus]] and pass its directory as `sfDir`.
   *
   * Usage: runMain graft.tools.QueryRunner <query> [sfDir] [repeats]
   */
@@ -16,42 +21,14 @@ object QueryRunner {
     val n = if (args.length > 2) args(2).toInt else 3
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
-    val spark = SparkSession.builder()
-      // default 4 = graft.Bench's default (SPARK_GRAFT_CPUS unset), so
-      // isolated numbers compare against the official scoreboard on the
-      // same core basis — the r10 fused-kernel table mixed 4-core bench
-      // baselines with 32-core QueryRunner numbers (docs/PERF.md r10
-      // correction); export SPARK_GRAFT_CPUS to probe scaling
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     SchemaCanary.preflight(spark.sparkContext.hadoopConfiguration, Seq(sfDir))
-    // same per-query hygiene as graft.Bench, so isolated numbers compare
-    // against suite numbers on harness-equal terms: codegen prewarmed at
-    // the smallest SF, checkpoint blocks/shuffle garbage dropped between
-    // runs (without this, repeated runs accumulate localCheckpoint blocks
-    // and "warm" drifts slower for harness reasons, not query reasons)
-    def drop(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.sqlContext.clearCache()
-      System.gc()
-    }
-    // graft.Bench's honest action: toRdd demands every output column, so
-    // the optimizer cannot prune the query's own projections the way a
-    // bare count() does
-    def materialize(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    try materialize(fn(spark, "/root/testdata/sf0.001"))
-    catch { case e: Throwable => System.err.println(s"[queryrunner] prewarm: ${e.getMessage}") }
-    finally drop()
+    Harness.prewarm(spark, Seq(name), "queryrunner")
     for (i <- 1 to n) {
       val t0 = System.nanoTime()
-      val rows = materialize(fn(spark, sfDir))
+      val rows = Harness.materialize(fn(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
-      drop()
+      Harness.drop(spark)
       println(f"[queryrunner] $name run $i: $sec%.3f s, $rows rows")
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.StreamingPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.max
 
 import java.nio.file.Files
@@ -12,14 +11,7 @@ import java.nio.file.Files
   * Usage: `sbt "runMain graft.tools.StreamingDemo"`. */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val landing = Files.createTempDirectory("graft-stream-demo").toString

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark's own AQE skew-join split — the mechanism a real cluster leans
-  * on FIRST for skewed joins, before manual salting — must actually fire
-  * on a planted-skew join (plan-level `skew=true` marker in the final
-  * adaptive plan) and must not change the join's result. The manual
-  * [[Analytics.saltedJoin]] remains for the cases AQE cannot touch
-  * (aggregation-key skew, non-shuffle-stat engines); the crossover is
-  * measured in graft.tools.AqeJoinProbe / SCALING.md. */
+  * on FIRST for skewed joins, before manual salting — must actually fire on a
+  * planted-skew join (plan-level `skew=true` marker in the final adaptive plan)
+  * and must not change the join's result. The manual [[Analytics.saltedJoin]]
+  * remains for the cases AQE cannot touch (aggregation-key skew,
+  * non-shuffle-stat engines); the crossover is measured by the AqeJoinProbe
+  * probe (last in commit 7edabe5), recorded in SCALING.md. */
 class AqeSkewSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 

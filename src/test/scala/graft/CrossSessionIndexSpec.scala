@@ -9,7 +9,8 @@ import java.nio.file.Files
 /** Cross-session visibility: appends arrive from OTHER sessions in the
   * deployment shape (streaming foreachBatch runs in cloned sessions), and
   * a session's cached relation file-listing does not include them without
-  * a refresh. Found live by StreamBench's vecgate census: the bench
+  * a refresh. Found live by the vecgate census of StreamBench (a probe
+  * last in commit 7edabe5): the bench
   * session's compact rewrote its stale listing and then deleted the
   * directory holding the unseen appended files — silently discarding
   * every admitted batch. These tests pin the refresh discipline on every

@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The library front door wires extensions + UDFs + conventions. */
 class GraftSessionSpec extends AnyFunSuite {
@@ -20,5 +23,26 @@ class GraftSessionSpec extends AnyFunSuite {
     // conventions
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+  }
+
+  test("only GraftSession and tools.Harness build a SparkSession in src/main") {
+    // every tool shares Harness's session basis; a hand-rolled builder is
+    // how 45 probes each drifted to their own config (runs from the repo
+    // root, like DocConsistencySpec)
+    val allowed = Set("src/main/scala/graft/GraftSession.scala",
+      "src/main/scala/graft/tools/Harness.scala")
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val builders = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(_.toString)
+      .filterNot(allowed)
+      .flatMap { p =>
+        new String(Files.readAllBytes(Paths.get(p)), StandardCharsets.UTF_8)
+          .linesIterator.zipWithIndex
+          .collect { case (l, i) if l.contains("SparkSession.builder") => s"$p:${i + 1}" }
+      }.toList
+    finally walk.close()
+    assert(builders.isEmpty,
+      s"build the session through graft.tools.Harness.session (or GraftSession): $builders")
   }
 }

@@ -38,7 +38,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(Similarity.nprobeFor(142) == 24)
     assert(Similarity.nprobeFor(245) == 32)
     assert(Similarity.nprobeFor(448) == 43)
-    assert(Similarity.nprobeFor(1415) == 76, "the 1000×/2M-vector point (DeepScaleProbe)")
+    assert(Similarity.nprobeFor(1415) == 76, "the 1000×/2M-vector point (SCALING.md r7)")
     assert(Similarity.nprobeFor(10) == 8, "floor: small indexes probe ≥8")
     assert(Similarity.nprobeFor(4) == 4, "cap: never more cells than exist")
     assert(Similarity.nprobeFor(1 << 16) == 512, "at the broadcast cap: 512 of 65,536")

@@ -37,15 +37,15 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("inverted-index joins: no STATIC broadcast; AQE upgrades from true sizes") {
-    // the 30× ScaleProbe run caught the static planner broadcasting the
-    // pair aggregate off a garbage pre-checkpoint estimate (LogicalRDD
-    // origin stats through a UDF-explode) and OOM-ing a 24 GB driver.
-    // AQE never demotes a static broadcast, so the only scale-safe shape
-    // is: statically a shuffle join (CheckpointShim drops the bogus
-    // stats), with AQE re-upgrading to broadcast where the MEASURED side
-    // is small. Assert both halves: the pre-execution plan has zero
-    // broadcast joins; the post-execution plan at this tiny sf has
-    // re-earned them from true sizes.
+    // the 30× ScaleProbe run (last in commit 7edabe5) caught the static planner
+    // broadcasting the pair aggregate off a garbage pre-checkpoint estimate
+    // (LogicalRDD origin stats through a UDF-explode) and OOM-ing a 24 GB
+    // driver. AQE never demotes a static broadcast, so the only scale-safe
+    // shape is: statically a shuffle join (CheckpointShim drops the bogus
+    // stats), with AQE re-upgrading to broadcast where the MEASURED side is
+    // small. Assert both halves: the pre-execution plan has zero broadcast
+    // joins; the post-execution plan at this tiny sf has re-earned them from
+    // true sizes.
     for (q <- Seq("q_jaccard_pairs", "q_winnow_overlap")) {
       val df = SparkEntry.queries(q)(spark, sf)
       val staticPlan = df.queryExecution.executedPlan.toString

@@ -8,8 +8,8 @@ import java.nio.file.Files
 
 /** The planted-panel recall estimator must agree with exact brute-force
   * ground truth wherever both are computable — that equivalence is what
-  * licenses its use past the exact-baseline cap (DeepScaleProbe `plant`
-  * tier at 5M/10M/20M vectors). */
+  * licenses its use past the exact-baseline cap (DeepScaleProbe `plant`, last
+  * in commit 7edabe5, tier at 5M/10M/20M vectors). */
 class RecallEstimatorSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -67,9 +67,9 @@ class RecallEstimatorSpec extends AnyFunSuite {
     // count (measured 0.51 → 0.64 at 30× already), while for a synthetic
     // query every corpus vector — replica or not — is a random-pair
     // cosine. 3× replica: ceiling must grow only marginally.
-    import graft.tools.ScaleProbe
+    import graft.tools.ScaleCorpus
     val gen = Files.createTempDirectory("graft-replica3").toString
-    ScaleProbe.generateEmbeddings(spark, dir, 3, gen.toString)
+    ScaleCorpus.generateEmbeddings(spark, dir, 3, gen.toString)
     val rep = spark.read.parquet(s"$gen/embeddings.parquet")
       .select("vec_id", "embedding")
     val p = RecallEstimator.panel(nQueries = 10)
@@ -89,15 +89,15 @@ class RecallEstimatorSpec extends AnyFunSuite {
     // only the on-disk corpus could expose), then compare the factorized
     // truth against plain brute force over what is actually stored
     val blocks = 4
-    val stride = graft.tools.ScaleProbe.BlockStride
+    val stride = graft.tools.ScaleCorpus.BlockStride
     val base = emb.as[(Long, Array[Float])].collect()
     val out = Files.createTempDirectory("graft-bstrat").toString
-    graft.tools.ScaleProbe.generateEmbeddings(spark, dir, blocks, out)
+    graft.tools.ScaleCorpus.generateEmbeddings(spark, dir, blocks, out)
     val replicated = spark.read.parquet(s"$out/embeddings.parquet")
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
     val qids = (0L until 10L).toSeq
     val got = RecallEstimator.blockStratumTopK(emb, qids, blocks, stride, 5,
-      graft.tools.ScaleProbe.sign)
+      graft.tools.ScaleCorpus.sign)
     // quadratic reference with the same (cos DESC, id ASC) tie-break
     val qv = base.filter(r => qids.contains(r._1)).toMap
     val want = qids.map { q =>

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape pins for the r13 fused rule-gate kernels — the structural
-  * claims behind the RulesProfile numbers, asserted on real plans so a
+  * claims behind the RulesProfile numbers (docs/PERF.md r13; the probe
+  * is last in commit 7edabe5), asserted on real plans so a
   * future optimizer/refactor change can't silently reintroduce the
   * HOF-no-CSE duplication:
   *

@@ -173,8 +173,9 @@ class ShingleIndexSpec extends AnyFunSuite {
       assert(filesAfter < filesBefore)
       // data unchanged through the staged swap
       assert(canon(ShingleIndex.probe(spark, "sixf", batch)) == beforeRows)
-      // append AFTER compact must follow the catalog to the generation dir
-      // (a pinned original path would analysis-error — StreamBench find)
+      // append AFTER compact must follow the catalog to the generation dir (a
+      // pinned original path would analysis-error — found by StreamBench, a
+      // probe last in commit 7edabe5)
       ShingleIndex.append(spark, "sixf", dir,
         corpus.limit(5).select((col("doc_id") + 5000000L).as("doc_id"), col("text")),
         buckets = 4)
