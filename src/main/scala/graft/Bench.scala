@@ -291,8 +291,7 @@ object Bench {
     val breakdown: Seq[(String, Double)] = try {
       import org.apache.spark.sql.functions.col
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_shindex").getAbsolutePath
+      val idxDir = Scratch.dir("graft_bench_shindex")
       def timed(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }
@@ -309,8 +308,7 @@ object Bench {
       // same split for the persistent IVF index (q_ivf_indexed's scoreboard
       // entry also rebuilds in-query for oracle self-containment)
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val ivfDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_ivfindex").getAbsolutePath
+      val ivfDir = Scratch.dir("graft_bench_ivfindex")
       val ivfBuildSec = timed(graft.operators.IvfIndex.build(
         e, ivfDir, "bench_ivfidx", nCentroids = 8,
         seed = graft.operators.Similarity.ResidueSeed))

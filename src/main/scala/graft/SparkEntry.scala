@@ -158,8 +158,7 @@ object SparkEntry {
     // pinned to the recompute path's exact answer
     "q_dedup_indexed" -> ((s, dir) => {
       val d = s.read.parquet(s"$dir/documents.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_shindex").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_shindex")
       ShingleIndex.build(d.filter(col("doc_id") % 13 =!= 0), idxDir, "q_shindex")
       ShingleIndex.probe(s, "q_shindex", d.filter(col("doc_id") % 13 === 0))
         .drop("shared").orderBy("doc_id")
@@ -170,8 +169,7 @@ object SparkEntry {
     // build; ShingleIndexSpec pins the cap-active semantics separately)
     "q_dedup_index_append" -> ((s, dir) => {
       val d = s.read.parquet(s"$dir/documents.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_shindex_app").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_shindex_app")
       val corpus = d.filter(col("doc_id") % 13 =!= 0)
       ShingleIndex.build(corpus.filter(col("doc_id") % 3 =!= 0), idxDir, "q_shindex_app")
       ShingleIndex.append(s, "q_shindex_app", idxDir, corpus.filter(col("doc_id") % 3 === 0))
@@ -247,8 +245,7 @@ object SparkEntry {
     // through the stored bucket-pruned path
     "q_ivf_indexed" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfindex").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfindex")
       IvfIndex.build(e, idxDir, "q_ivfidx", nCentroids = 8, seed = Similarity.ResidueSeed)
       // nprobe pinned at the oracle's constant (the operator default is
       // the nprobeFor recall-floor rule)
@@ -264,8 +261,7 @@ object SparkEntry {
     // SQL pins stored ≡ recompute bit-for-bit
     "q_semdedup_indexed" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_semdedup").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_semdedup")
       IvfIndex.build(e, idxDir, "q_semdd", nCentroids = 8, seed = Similarity.ResidueSeed)
       Dedup.semanticDedupIndexed(s, "q_semdd", threshold = 0.45)
     }),
@@ -274,8 +270,7 @@ object SparkEntry {
     // assignment CTEs with the shared verdict tail
     "q_semdedup_imi" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_semdd_imi").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_semdd_imi")
       ImiIndex.build(e, idxDir, "q_sddimi", k1 = 8)
       Dedup.semanticDedupImi(s, "q_sddimi", threshold = 0.45)
     }),
@@ -285,8 +280,7 @@ object SparkEntry {
     // stored path
     "q_ivf_indexed_int8" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfindex8").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfindex8")
       IvfIndex.build(e, idxDir, "q_ivfidx8", nCentroids = 8, seed = Similarity.ResidueSeed)
       IvfIndex.searchInt8(s, "q_ivfidx8", e.filter(col("vec_id") < 50), nprobe = 2)
     }),
@@ -296,8 +290,7 @@ object SparkEntry {
     // pass-through
     "q_ivf_rerank" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfrerank").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfrerank")
       IvfIndex.build(e, idxDir, "q_ivfrr", nCentroids = 8, seed = Similarity.ResidueSeed)
       IvfIndex.searchRerank(s, "q_ivfrr", e.filter(col("vec_id") < 50),
         nprobe = 2, widen = 2)
@@ -308,8 +301,7 @@ object SparkEntry {
     // rule relationally
     "q_ivf_adaptive" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfadaptive").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfadaptive")
       IvfIndex.build(e, idxDir, "q_ivfad", nCentroids = 8, seed = Similarity.ResidueSeed)
       IvfIndex.searchAdaptive(s, "q_ivfad", e.filter(col("vec_id") < 50),
         chunk = 2, maxChunks = 3)
@@ -320,8 +312,7 @@ object SparkEntry {
     // only; oracle unrolls the per-subspace Lloyd codebooks + rotation
     "q_ivf_pq" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfpq").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfpq")
       IvfIndex.build(e, idxDir, "q_ivfpq", nCentroids = 8, seed = Similarity.ResidueSeed,
         pq = Pq.PqSpec(m = 4, k = 8))
       IvfIndex.searchPq(s, "q_ivfpq", e.filter(col("vec_id") < 50), nprobe = 2)
@@ -330,8 +321,7 @@ object SparkEntry {
     // cut BITE so the oracle pins the two-stage semantics end-to-end
     "q_ivf_pq_rerank" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfpqrr").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfpqrr")
       IvfIndex.build(e, idxDir, "q_ivfpqrr", nCentroids = 8, seed = Similarity.ResidueSeed,
         pq = Pq.PqSpec(m = 4, k = 8))
       IvfIndex.searchPqRerank(s, "q_ivfpqrr", e.filter(col("vec_id") < 50),
@@ -344,8 +334,7 @@ object SparkEntry {
     // rotation, the per-subspace codebooks, and the coarse-term join
     "q_ivf_pq_res" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfpqres").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfpqres")
       IvfIndex.build(e, idxDir, "q_ivfpqres", nCentroids = 8, seed = Similarity.ResidueSeed,
         pq = Pq.PqSpec(m = 4, k = 8, residual = true))
       IvfIndex.searchPq(s, "q_ivfpqres", e.filter(col("vec_id") < 50), nprobe = 2)
@@ -353,8 +342,7 @@ object SparkEntry {
     // residual-ADC wide → exact-float re-rank; widen=2 makes the cut BITE
     "q_ivf_pq_res_rerank" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_ivfpqresrr").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_ivfpqresrr")
       IvfIndex.build(e, idxDir, "q_ivfpqresrr", nCentroids = 8, seed = Similarity.ResidueSeed,
         pq = Pq.PqSpec(m = 4, k = 8, residual = true))
       IvfIndex.searchPqRerank(s, "q_ivfpqresrr", e.filter(col("vec_id") < 50),
@@ -365,8 +353,7 @@ object SparkEntry {
     // through the stored bucket-pruned path
     "q_imi_indexed" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_imiindex").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_imiindex")
       ImiIndex.build(e, idxDir, "q_imiidx", k1 = 8)
       ImiIndex.search(s, "q_imiidx", e.filter(col("vec_id") < 50), nprobe = 4)
     }),
@@ -376,8 +363,7 @@ object SparkEntry {
     // the stored bucket-pruned path
     "q_imi_indexed_rot" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_q_imiindexrot").getAbsolutePath
+      val idxDir = Scratch.dir("graft_q_imiindexrot")
       ImiIndex.build(e, idxDir, "q_imiidxrot", k1 = 8, rotSeed = Imi.RotSeed)
       ImiIndex.search(s, "q_imiidxrot", e.filter(col("vec_id") < 50), nprobe = 4)
     }),

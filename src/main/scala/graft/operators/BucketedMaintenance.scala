@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, when}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Shared compaction for append-accreted BUCKETED catalog tables — the
   * staged-swap rewrite used by [[ShingleIndex.compact]] and
@@ -227,9 +228,9 @@ object BucketedMaintenance {
     * compact lands between the commit and the validation; without it that
     * pattern (or two back-to-back compacts in one append window) could
     * misread survivorship and duplicate on retry. EVERY in-tree append
-    * path passes an exact probe (the vector indexes probe batch vec_ids,
-    * [[ShingleIndex.append]] probes each of its four tables under its own
-    * single-table guard — see [[disjointBatchProbe]]); the documented
+    * path passes an exact probe ([[holdsAll]]: the vector indexes probe
+    * their batch vec_ids, [[ShingleIndex.append]] each of its four tables'
+    * batch keys under its own single-table guard); the documented
     * supported regime for heuristic-only external callers stays one
     * compact — and no rebuild — per append window (the same
     * single-maintainer stance as [[compact]]). */
@@ -339,44 +340,184 @@ object BucketedMaintenance {
     }
   }
 
-  /** Exact-survivorship probe factory for [[guardedAppend]]: "every id in
-    * `batchKeys` is present in `table`", valid ONLY when the batch's ids
-    * are disjoint from the table's — so the disjointness is ASSERTED here,
-    * eagerly, before the caller starts its append. Without the assertion a
-    * replayed id already present in the table satisfies the semi-join even
-    * though the raced append's rows died with a compacted generation
-    * (silent row loss — advisor r8); and duplicate ids could inflate a
-    * raw-join count into a spurious retry. The probe itself is a LEFT SEMI
-    * join (one hit per batch id no matter how many stored rows match), so
-    * it cannot over-count.
-    *
-    * Re-appending an id that is already in an index is a caller bug in its
-    * own right (search would return the same neighbor twice); the loud
-    * require here turns that bug into an error at the append site instead
-    * of corrupting the guard's semantics. `batchKeys` must be distinct. */
-  def disjointBatchProbe(spark: SparkSession,
-                         table: String,
-                         batchKeys: org.apache.spark.sql.DataFrame,
-                         keyCol: String): () => Boolean = {
-    // ONE eager job for both counts (the r9 append-guard regression was
-    // ~8 small pre-write jobs per 4-table append — this halves them): the
-    // union's second branch is the semi-join hit set, and identical
-    // batch-side subplans share their exchange, so the batch relation is
-    // not computed twice
-    val row = batchKeys.select(lit(false).as("hit"))
-      .unionAll(batchKeys.join(spark.table(table), Seq(keyCol), "left_semi")
-        .select(lit(true).as("hit")))
-      .agg(count(lit(1)).as("total"),
-        count(when(col("hit"), lit(1))).as("already"))
-      .collect()(0)
-    val already = row.getLong(1)
-    val n = row.getLong(0) - already
-    require(already == 0L,
-      s"append into `$table`: $already batch ${keyCol}s are already present — " +
-        "re-appending stored ids would duplicate index rows and break the " +
-        "append guard's survivorship probe. Deduplicate the batch against " +
-        "the table (anti-join) before appending.")
-    () => batchKeys.join(spark.table(table), Seq(keyCol), "left_semi").count() == n
+  /** Most input rows a driver-assembled index append holds at once
+    * ([[ShingleIndex.append]], [[IvfIndex.assignInto]],
+    * [[ImiIndex.assignInto]] and the [[LandingZone]] absorbs that feed
+    * them). A larger input is appended as successive chunks of this many
+    * rows by the same code — for the shingle index that is the forward-cap
+    * contract of successive appends. At 10k documents of ~100 shingles a
+    * chunk's occurrence delta is ~8 MB of keys on the driver. */
+  val MaxAppendRows: Int = 10 * 1000
+
+  /** Feed `rows` to `f` in chunks of at most `bound` rows, ascending by
+    * their first column, a non-null unique long id. One ordered-limit
+    * collect per chunk, so an input of fewer than `bound` rows costs one
+    * job and the driver never holds more than `bound` rows. A full chunk
+    * is followed by a collect from its last id INCLUSIVE: that one carried
+    * row is dropped, and a second row with the same id — the duplicate an
+    * exclusive bound would silently skip — fails like any other repeat. */
+  private[graft] def foreachChunk(rows: DataFrame, bound: Int)(f: Array[Row] => Unit): Unit = {
+    require(bound >= 2, s"chunk bound must be at least 2, got $bound")
+    val id = rows.columns.head
+    val dupMsg = s"$id must be unique within a batch"
+    var from: Option[Long] = None
+    var more = true
+    while (more) {
+      val raw = from.fold(rows)(l => rows.filter(col(id) >= l))
+        .coalesce(rows.sparkSession.sparkContext.defaultParallelism)
+        .orderBy(id).limit(bound).collect()
+      require(!raw.exists(_.isNullAt(0)), s"$id must not be NULL")
+      more = raw.length == bound
+      val chunk = from.fold(raw) { l =>
+        require(raw.count(_.getLong(0) == l) <= 1, dupMsg)
+        raw.filter(_.getLong(0) != l)
+      }
+      require(chunk.iterator.map(_.getLong(0)).distinct.size == chunk.length, dupMsg)
+      if (chunk.nonEmpty) {
+        f(chunk)
+        from = Some(chunk.last.getLong(0))
+      }
+    }
+  }
+
+  /** How many rows of `table` hold each of `keys` in the long column
+    * `column` (keys it does not hold are absent) — the lookup a
+    * driver-assembled append makes for what its batch touches. */
+  private[graft] def storedCounts(spark: SparkSession, table: String, column: String,
+                                  keys: Iterable[Long]): Map[Long, Long] =
+    storedCounts(spark, Seq((table, column, keys)), Seq.empty)._1.head
+
+  /** Several [[storedCounts]] lookups — long-keyed legs, then string-keyed
+    * legs, each `(table, column, keys)` — in ONE scan job with no exchange:
+    * the legs' one-column scans are unioned, run as the plan's row RDD
+    * coalesced to the session's parallelism (an accreted bucketed table is
+    * a task per file otherwise), the sorted key sets ride one broadcast
+    * variable (no job), each task counts its hits and the driver merges
+    * them. A literal IN list of ~10k
+    * keys costs seconds to plan, a broadcast join pays a job for the
+    * broadcast itself, and each separate action pays the scheduler's
+    * per-job cost again. Returns the legs' counts in order. */
+  private[graft] def storedCounts(spark: SparkSession,
+                                  longs: Seq[(String, String, Iterable[Long])],
+                                  strings: Seq[(String, String, Iterable[String])])
+  : (Seq[Map[Long, Long]], Seq[Map[String, Long]]) = {
+    val lk = longs.map(_._3.toArray.distinct.sorted)
+    val sk = strings.map(_._3.toArray.distinct.sorted)
+    val scans =
+      longs.zip(lk).zipWithIndex.collect { case (((t, c, _), ks), leg) if ks.nonEmpty =>
+        spark.table(t).select(lit(leg).as("leg"), col(c).cast("long").as("l"),
+          lit(null).cast("string").as("s"))
+      } ++ strings.zip(sk).zipWithIndex.collect { case (((t, c, _), ks), leg) if ks.nonEmpty =>
+        spark.table(t).select(lit(longs.length + leg).as("leg"), lit(0L).as("l"),
+          col(c).cast("string").as("s"))
+      }
+    val hits = if (scans.isEmpty) Array.empty[(Int, Long, String, Long)] else {
+      val sc = spark.sparkContext
+      val keys = sc.broadcast((lk.toArray, sk.toArray))
+      // names the job's stage after the looked-up tables
+      sc.setCallSite("lookup " + (longs ++ strings).map(l => s"${l._1}.${l._2}").mkString(", "))
+      try scans.reduce(_ unionAll _).queryExecution.toRdd.coalesce(sc.defaultParallelism)
+        .mapPartitions { rows =>
+          val (ls, ss) = keys.value
+          val n = scala.collection.mutable.HashMap.empty[(Int, Long, String), Long]
+          rows.foreach { r =>
+            val leg = r.getInt(0)
+            val hit =
+              if (leg < ls.length) {
+                val l = r.getLong(1)
+                if (java.util.Arrays.binarySearch(ls(leg), l) >= 0) (leg, l, null) else null
+              } else {
+                val v = r.getUTF8String(2).toString
+                if (java.util.Arrays.binarySearch(
+                    ss(leg - ls.length).asInstanceOf[Array[AnyRef]], v) >= 0) (leg, 0L, v)
+                else null
+              }
+            if (hit != null) n(hit) = n.getOrElse(hit, 0L) + 1L
+          }
+          n.iterator.map { case ((leg, l, v), c) => (leg, l, v, c) }
+        }.collect()
+      finally {
+        sc.clearCallSite()
+        keys.destroy()
+      }
+    }
+    val byLeg = hits.groupBy(_._1)
+    def counts[K](leg: Int, key: ((Int, Long, String, Long)) => K): Map[K, Long] =
+      byLeg.getOrElse(leg, Array.empty).groupMapReduce(key)(_._4)(_ + _)
+    (longs.indices.map(counts(_, _._2)),
+      strings.indices.map(i => counts(longs.length + i, _._3)))
+  }
+
+  /** The rows of `chunk` (first column: the id) whose id `table` does not
+    * hold yet, given `present` — the [[storedCounts]] of the chunk's ids.
+    * With `dropPresent` the others are dropped: a landing-zone replay of
+    * rows an earlier absorb already appended. Otherwise they fail the
+    * append loudly before any write: re-appending a stored id would
+    * duplicate index rows (a search would return the same neighbor twice)
+    * and would let the exact survivorship probe of [[guardedAppend]] read
+    * a raced append whose rows died with a compacted generation as
+    * durable — silent row loss. */
+  private[graft] def freshRows(table: String, chunk: Array[Row], present: Map[Long, Long],
+                               dropPresent: Boolean): Array[Row] =
+    if (dropPresent) chunk.filterNot(r => present.contains(r.getLong(0)))
+    else {
+      require(present.isEmpty,
+        s"append into `$table`: ${present.size} batch ids are already present — " +
+          "re-appending stored ids would duplicate index rows and break the " +
+          "append guard's survivorship probe. Deduplicate the batch against " +
+          "the table (anti-join) before appending.")
+      chunk
+    }
+
+  /** Exact survivorship probe for [[guardedAppend]]: `table` holds every
+    * one of `ids` in `column`. Exact because the ids were absent before the
+    * append ([[freshRows]]); evaluated only when a compact raced it. */
+  private[graft] def holdsAll(spark: SparkSession, table: String, column: String,
+                              ids: Seq[Long]): () => Boolean =
+    () => storedCounts(spark, table, column, ids).size == ids.distinct.size
+
+  /** The vector indexes' append: `vecs` — `(vec_id, embedding)` — in
+    * chunks of at most `bound` rows, each checked against the ids `table`
+    * already holds ([[freshRows]]) and handed to `write` as a one-partition
+    * local relation under a single-table [[guardedAppend]] with the exact
+    * [[holdsAll]] probe. Per chunk: one collect, one lookup, one write.
+    * Returns (rows read, rows appended). */
+  private[graft] def appendVectors(spark: SparkSession, table: String, vecs: DataFrame,
+                                   bound: Int, dropPresent: Boolean)(
+      write: DataFrame => Unit): (Long, Long) = {
+    var read = 0L
+    var appended = 0L
+    foreachChunk(vecs, bound) { chunk =>
+      read += chunk.length
+      forgetListings(spark, Seq(table))
+      val rows = freshRows(table, chunk,
+        storedCounts(spark, table, "vec_id", chunk.map(_.getLong(0))), dropPresent)
+      if (rows.nonEmpty) {
+        guardedAppend(spark, Seq(table),
+          rowsPresent = Some(holdsAll(spark, table, "vec_id", rows.map(_.getLong(0)).toSeq))) {
+          write(localRelation(spark, vecs.schema, rows.toSeq))
+        }
+        appended += rows.length
+      }
+    }
+    (read, appended)
+  }
+
+  /** Drop this session's cached file listings of `tables`, so the next
+    * scan sees appends another session (a streaming clone) committed. The
+    * cheap half of `catalog.refreshTable`: nothing here is cached data,
+    * so there is nothing to re-cache. */
+  private[graft] def forgetListings(spark: SparkSession, tables: Seq[String]): Unit =
+    tables.foreach(t => spark.sessionState.catalog.invalidateCachedTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)))
+
+  /** `rows` as a ONE-partition local relation: a bucketed append of it
+    * writes at most one file per bucket, so appends do not multiply the
+    * table's file count by the session's parallelism. */
+  private[graft] def localRelation(spark: SparkSession, schema: StructType,
+                                   rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
   }
 
   /** Drop `table` and its backing files (wherever a prior [[compact]] left

@@ -127,12 +127,20 @@ object ImiIndex {
   }
 
   /** Assign new vectors into the EXISTING half-models (no retrain) and
-    * append bucketed — the [[IvfIndex.assignInto]] analog, writing
-    * through the catalog so it follows a compacted table's location. */
-  /** `buckets = 0` (the default) follows the STORED table's bucket spec
-    * — see [[IvfIndex.assignInto]]. */
+    * append bucketed — the [[IvfIndex.assignInto]] analog (same chunking,
+    * presence check and guard), writing through the catalog so it follows
+    * a compacted table's location. `buckets = 0` (the default) follows the
+    * STORED table's bucket spec. */
   def assignInto(spark: SparkSession, tag: String,
-                 newVecs: DataFrame, buckets: Int = 0): Unit =
+                 newVecs: DataFrame, buckets: Int = 0): Unit = {
+    assignChunks(spark, tag, newVecs, buckets, BucketedMaintenance.MaxAppendRows,
+      dropPresent = false)
+    ()
+  }
+
+  /** [[assignInto]] in chunks — see [[IvfIndex.assignChunks]]. */
+  private[graft] def assignChunks(spark: SparkSession, tag: String, newVecs: DataFrame,
+                                  buckets: Int, bound: Int, dropPresent: Boolean): (Long, Long) =
       LeaseLock.withTableLock(spark, tag) {
     import spark.implicits._
     IndexCanary.check(spark, modelTable(tag), assignTable(tag))
@@ -142,18 +150,10 @@ object ImiIndex {
     val kk = cl.length
     // rotate into the index's stored space when the model carries a seed
     val seed = rotSeedOf(spark, tag)
-    val inVecs = if (seed != 0)
-      Imi.rotated(newVecs.select(col("vec_id"), col("embedding")), seed)
-    else newVecs
-    // post-commit swap validation + retry, as in [[IvfIndex.assignInto]],
-    // with the same exact batch-id survivorship probe (and the same
-    // disjointness precondition that makes it exact — see there)
-    val batchIds = newVecs.select("vec_id").distinct()
-    val present = BucketedMaintenance.disjointBatchProbe(
-      spark, assignTable(tag), batchIds, "vec_id")
-    BucketedMaintenance.guardedAppend(spark, Seq(assignTable(tag)),
-      rowsPresent = Some(present)) {
-      inVecs.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+    BucketedMaintenance.appendVectors(spark, assignTable(tag),
+      newVecs.select(col("vec_id").cast("long"), col("embedding")), bound, dropPresent) {
+      local => (if (seed != 0) Imi.rotated(local, seed) else local)
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
         .map { case (id, v) => (id, Imi.cellIdOf(v, cl, cr, kk), v, Similarity.normP(v)) }
         .toDF("vec_id", "cell_id", "embedding", "nrm")
         .write.mode(SaveMode.Append).format("parquet")

@@ -184,39 +184,40 @@ object IvfIndex {
     * Writes through the catalog location, so it follows the table
     * wherever [[compact]] last moved it. `buckets = 0` (the default)
     * follows the STORED table's bucket spec — an explicit count that
-    * disagrees with it would fail Spark's spec-mismatch check. */
+    * disagrees with it would fail Spark's spec-mismatch check. `vec_id`
+    * must be unique within the batch and absent from the index — a repeat
+    * or a stored id fails loudly before the write. A batch of more than
+    * [[BucketedMaintenance.MaxAppendRows]] vectors is appended as
+    * successive chunks of that size. */
   def assignInto(spark: SparkSession, tag: String,
-                 newVecs: DataFrame, buckets: Int = 0): Unit =
+                 newVecs: DataFrame, buckets: Int = 0): Unit = {
+    assignChunks(spark, tag, newVecs, buckets, BucketedMaintenance.MaxAppendRows,
+      dropPresent = false)
+    ()
+  }
+
+  /** [[assignInto]] in chunks of at most `bound` vectors: per chunk one
+    * collect, one lookup of the chunk's ids already stored (skipped with
+    * `dropPresent` — the [[LandingZone]] crash-window replay — and a loud
+    * failure otherwise) and one write of a one-partition local relation
+    * through the shared assignment kernel. Returns (vectors read, vectors
+    * appended). */
+  private[graft] def assignChunks(spark: SparkSession, tag: String, newVecs: DataFrame,
+                                  buckets: Int, bound: Int, dropPresent: Boolean): (Long, Long) =
       LeaseLock.withTableLock(spark, tag) {
-    import spark.implicits._
     IndexCanary.check(spark, modelTable(tag), assignTable(tag))
     val bk = if (buckets == 0)
       BucketedMaintenance.storedBuckets(spark, assignTable(tag)) else buckets
     val cents = loadModel(spark, tag)
-    // append through the catalog location (no path pin): after a
-    // [[compact]] the table lives in a generation dir and a pinned
-    // original path analysis-errors on the mismatch. guardedAppend
-    // validates post-commit that no compact swapped the location
-    // mid-call (and retries if the rows died with the old generation).
-    // exact survivorship probe: every batch id present in the (possibly
-    // swapped) assignment relation — makes the guard's raced-append
-    // resolution exact rather than the file-count heuristic. The probe is
-    // exact only because the batch's ids are DISJOINT from the stored
-    // table's (asserted inside disjointBatchProbe before the append
-    // starts): a replayed id already present would otherwise read a dead
-    // raced append as durable — silent row loss (advisor r8).
-    val batchIds = newVecs.select("vec_id").distinct()
-    val present = BucketedMaintenance.disjointBatchProbe(
-      spark, assignTable(tag), batchIds, "vec_id")
     // appended vectors get PQ codes iff the index carries the tier — the
     // stored codebook decides, so appends can never drift the schema
     val pqOpt = if (spark.catalog.tableExists(pqModelTable(tag))) {
       val pm = loadPqModel(spark, tag)
       Some(PqEnc(pm.books, pm.signs, pm.residual))
     } else None
-    BucketedMaintenance.guardedAppend(spark, Seq(assignTable(tag)),
-      rowsPresent = Some(present)) {
-      assignedFrame(newVecs.select(col("vec_id"), col("embedding")), cents, pqOpt)
+    BucketedMaintenance.appendVectors(spark, assignTable(tag),
+      newVecs.select(col("vec_id").cast("long"), col("embedding")), bound, dropPresent) {
+      local => assignedFrame(local, cents, pqOpt)
         .write.mode(SaveMode.Append).format("parquet")
         .bucketBy(bk, "cid").sortBy("cid")
         .saveAsTable(assignTable(tag))

@@ -25,18 +25,19 @@ import org.apache.spark.sql.types.StructType
   *     files under `<root>/consumed/`, so each committed segment feeds
   *     the index once;
   *   - crash in the append→consume-mark window: the next absorb re-reads
-  *     the segment but anti-joins the batch against the index's sizes
-  *     table (`corpus_id` — one row per absorbed doc), so already-
-  *     absorbed docs drop out and the replay is a no-op instead of the
-  *     loud disjointness rejection [[ShingleIndex.append]] would raise;
+  *     the segment, but the append's presence lookup finds the already-
+  *     absorbed docs in the index's sizes table (`corpus_id` — one row per
+  *     absorbed doc) and skips them, so the replay is a no-op instead of
+  *     the loud "already present" rejection a direct
+  *     [[ShingleIndex.append]] raises;
   *   - a LATE lower-attempt replay that retroactively changes a segment's
   *     winner after absorb surfaces as a "new" pending segment whose docs
-  *     the same anti-join drops — zero-dup holds under the manifest
+  *     the same lookup drops — zero-dup holds under the manifest
   *     protocol's one documented race.
   *
   * Scale shape: absorb cost is O(pending segments + touched index keys) —
   * [[ShingleIndex.append]]'s contract — independent of both corpus size
-  * and log history; the anti-join's index side is a bucketed catalog scan.
+  * and log history; the lookups scan one column of an index table each.
   * At 100 TB the cadence is: land continuously, absorb per maintenance
   * cycle, [[ShingleIndex.compact]] when file counts accrete,
   * [[ShingleIndex.rebuildIfNeeded]] when the overshoot census trips, and
@@ -77,39 +78,25 @@ object LandingZone {
   final case class AbsorbReport(segments: Seq[String], landedDocs: Long,
                                 freshDocs: Long)
 
-  /** The absorb core both index families share (r13 verdict task 4 asked
-    * for exactly this generalization): read the pending segments ONCE,
-    * anti-join against the index's membership relation on `keyCol`, feed
-    * the survivors to the index's `append`, consume-mark. Callers hold
-    * the index lease and have validated the index exists.
-    *
-    * The single read matters twice over (review r13): a second parquet
-    * read for the report would both double the scan and race a concurrent
-    * low-grace retire after the consume-marking below — so the batch is
-    * frozen to executor blocks, both counts and the anti-join derive from
-    * the stored rows, and nothing touches the segment files after that
-    * point. The anti-join result is likewise frozen BEFORE `append`
-    * mutates the very membership relation it was computed from
-    * (self-referential otherwise — the same discipline as
-    * [[ShingleIndex.append]]'s own sat anti-join). Consume-marking comes
-    * AFTER the append is durable: a crash anywhere earlier re-runs the
-    * pass and the anti-join makes the re-run a no-op. */
-  private def absorbPending(spark: SparkSession, root: String,
-                            schema: StructType, keyCol: String,
-                            membership: () => DataFrame,
-                            append: DataFrame => Unit): AbsorbReport = {
+  /** The absorb core every index family shares: read the pending segments
+    * and hand them to the index's chunked append with `dropPresent` — docs
+    * or vectors the index already holds (a crash-window replay, a late
+    * winner) are skipped by the append's own presence lookup, the rest
+    * appended — then consume-mark. Callers hold the index lease and have
+    * validated the index exists. The append reads the segment files in
+    * bound-sized chunks (one collect for a landing zone under the bound)
+    * and reports both counts, so nothing re-reads them: every read ends
+    * before the consume-marking, which a concurrent low-grace retire waits
+    * for. Consume-marking comes AFTER the append is durable: a crash
+    * anywhere earlier re-runs the pass and the presence lookup makes the
+    * re-run a no-op. */
+  private def absorbPending(spark: SparkSession, root: String, schema: StructType,
+                            append: DataFrame => (Long, Long)): AbsorbReport = {
     val pending = pendingSegments(spark, root)
     if (pending.isEmpty) AbsorbReport(Seq.empty, 0L, 0L)
     else {
-      val batch = org.apache.spark.sql.graft.CheckpointShim
-        .statsHonestLocalCheckpoint(spark.read.schema(schema)
-          .parquet(pending.map(s => s"$root/data/$s"): _*))
-      val landedDocs = batch.count()
-      val fresh = org.apache.spark.sql.graft.CheckpointShim
-        .statsHonestLocalCheckpoint(
-          batch.join(membership(), Seq(keyCol), "left_anti"))
-      val freshDocs = fresh.count()
-      if (freshDocs > 0) append(fresh)
+      val (landedDocs, freshDocs) =
+        append(spark.read.schema(schema).parquet(pending.map(s => s"$root/data/$s"): _*))
       val f = fs(spark, root)
       f.mkdirs(new Path(consumedDir(root)))
       pending.foreach { s =>
@@ -122,79 +109,83 @@ object LandingZone {
   /** Compact every pending committed segment into the shingle index.
     * Requires a built index (`tag`); runs under its lease (re-entrant
     * with [[ShingleIndex.append]]'s own acquisition). `schema` is the
-    * landing shape — (doc_id, text) for the dedup index.
+    * landing shape — (doc_id, text) for the dedup index. Absorb cost is
+    * [[ShingleIndex.append]]'s: for a landing zone under
+    * [[BucketedMaintenance.MaxAppendRows]] docs, one collect, one lookup
+    * job and at most four concurrent table writes.
     *
-    * Stated corner: the anti-join's "already absorbed" set is the sizes
-    * table, which has one row per doc WITH ≥1 admitted shingle. A doc
+    * Stated corner: "already absorbed" means the sizes table holds the
+    * doc_id, and sizes has one row per doc WITH ≥1 admitted shingle. A doc
     * whose every shingle was df-cap-rejected on admission has no sizes
     * row, so a crash-window replay re-reads it as fresh — its re-append
-    * admits zero rows again (same cap) and the pass consume-marks its
-    * segment, so the corner is a bounded no-op, never a loop or a dup. */
+    * admits zero rows again (same cap), its fingerprint is already stored,
+    * and the pass consume-marks its segment, so the corner is a bounded
+    * no-op, never a loop or a dup. */
   def absorbIntoShingleIndex(spark: SparkSession, root: String,
                              schema: StructType, tag: String, path: String,
                              buckets: Int = 8,
                              maxShingleDf: Int = Dedup.DefaultMaxShingleDf): AbsorbReport =
+    absorbIntoShingleIndex(spark, root, schema, tag, path, buckets, maxShingleDf,
+      BucketedMaintenance.MaxAppendRows)
+
+  private[graft] def absorbIntoShingleIndex(spark: SparkSession, root: String,
+                                            schema: StructType, tag: String, path: String,
+                                            buckets: Int, maxShingleDf: Int,
+                                            bound: Int): AbsorbReport =
       LeaseLock.withTableLock(spark, tag) {
     require(spark.catalog.tableExists(ShingleIndex.sizesTable(tag)),
       s"index '$tag' must be built before absorbing a landing zone into it")
-    absorbPending(spark, root, schema, "doc_id",
-      membership = () => {
-        spark.catalog.refreshTable(ShingleIndex.sizesTable(tag))
-        spark.table(ShingleIndex.sizesTable(tag))
-          .select(col("corpus_id").as("doc_id"))
-      },
-      append = fresh =>
-        ShingleIndex.append(spark, tag, path, fresh, buckets, maxShingleDf))
+    absorbPending(spark, root, schema, landed =>
+      ShingleIndex.appendChunks(spark, tag, path, landed, buckets, maxShingleDf, bound,
+        dropPresent = true))
   }
 
   /** The same lifecycle for the VECTOR side (r13 verdict task 4 /
     * missing-item 3): landed embedding batches compact into the
-    * persistent [[IvfIndex]] under its lease. Membership is the
-    * assignment relation itself (one row per absorbed vec_id — no
-    * df-cap corner here: every absorbed vector gets exactly one
-    * assignment row, so a crash-window replay's anti-join is exact);
-    * append is [[IvfIndex.assignInto]] — landed vectors get cells from
-    * the STORED model (no retrain, standard IVF maintenance), so an
+    * persistent [[IvfIndex]] under its lease. "Already absorbed" is the
+    * assignment relation itself (one row per absorbed vec_id — no df-cap
+    * corner here: every absorbed vector gets exactly one assignment row,
+    * so a crash-window replay is dropped exactly); append is
+    * [[IvfIndex.assignInto]]'s chunked path — landed vectors get cells
+    * from the STORED model (no retrain, standard IVF maintenance), so an
     * absorb never changes the centroids a concurrent search is probing.
     * `schema` is the landing shape — (vec_id, embedding).
     *
     * Same exactly-once contract as the shingle side, leg by leg: land
     * via the manifest protocol, absorb lease-serialized with consumed
     * markers, crash in the append→consume-mark window replays into the
-    * anti-join (no-op), and a late lower-attempt winner surfaces as a
-    * "new" segment whose vectors the anti-join drops. When the absorbed
+    * presence lookup (no-op), and a late lower-attempt winner surfaces as
+    * a "new" segment whose vectors the lookup drops. When the absorbed
     * volume outgrows the model, [[IvfIndex.rebuildIfNeeded]] is the
     * maintenance tick's next call — same cadence note as the class doc. */
   def absorbIntoIvfIndex(spark: SparkSession, root: String,
                          schema: StructType, tag: String): AbsorbReport =
+    absorbIntoIvfIndex(spark, root, schema, tag, BucketedMaintenance.MaxAppendRows)
+
+  private[graft] def absorbIntoIvfIndex(spark: SparkSession, root: String,
+                                        schema: StructType, tag: String,
+                                        bound: Int): AbsorbReport =
       LeaseLock.withTableLock(spark, tag) {
     require(spark.catalog.tableExists(IvfIndex.assignTable(tag)),
       s"IVF index '$tag' must be built before absorbing a landing zone into it")
-    absorbPending(spark, root, schema, "vec_id",
-      membership = () => {
-        spark.catalog.refreshTable(IvfIndex.assignTable(tag))
-        spark.table(IvfIndex.assignTable(tag)).select(col("vec_id"))
-      },
-      append = fresh => IvfIndex.assignInto(spark, tag, fresh))
+    absorbPending(spark, root, schema, landed =>
+      IvfIndex.assignChunks(spark, tag, landed, 0, bound, dropPresent = true))
   }
 
   /** [[absorbIntoIvfIndex]] for the past-the-broadcast-cap regime's
     * [[ImiIndex]] — completing the family the r13 verdict named
     * ("IvfIndex/ImiIndex"). [[ImiIndex.assignInto]] takes RAW vectors and
     * rotates into the index's stored space itself when the model carries
-    * a seed; vec_ids are rotation-invariant, so the membership anti-join
-    * is the same one the IVF side runs. */
+    * a seed; vec_ids are rotation-invariant, so the presence lookup is
+    * the same one the IVF side runs. */
   def absorbIntoImiIndex(spark: SparkSession, root: String,
                          schema: StructType, tag: String): AbsorbReport =
       LeaseLock.withTableLock(spark, tag) {
     require(spark.catalog.tableExists(ImiIndex.assignTable(tag)),
       s"IMI index '$tag' must be built before absorbing a landing zone into it")
-    absorbPending(spark, root, schema, "vec_id",
-      membership = () => {
-        spark.catalog.refreshTable(ImiIndex.assignTable(tag))
-        spark.table(ImiIndex.assignTable(tag)).select(col("vec_id"))
-      },
-      append = fresh => ImiIndex.assignInto(spark, tag, fresh))
+    absorbPending(spark, root, schema, landed =>
+      ImiIndex.assignChunks(spark, tag, landed, 0, BucketedMaintenance.MaxAppendRows,
+        dropPresent = true))
   }
 
   /** Compact the landing zone's committed view ([[ManifestLog.compact]] —
@@ -264,8 +255,7 @@ object LandingZone {
     * temp state, retired (grace 0) and removed before returning. */
   def queryAbsorb(spark: SparkSession, dir: String): DataFrame = {
     val d = spark.read.parquet(s"$dir/documents.parquet")
-    val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_q_shindex_land").getAbsolutePath
+    val idxDir = graft.Scratch.dir("graft_q_shindex_land")
     val corpus = d.filter(col("doc_id") % 13 =!= 0)
     ShingleIndex.build(corpus.filter(col("doc_id") % 3 =!= 0), idxDir, "q_shindex_land")
     // landing is read by all three writers' filters — freeze it once
@@ -313,8 +303,7 @@ object LandingZone {
     * returning. */
   def queryVecAbsorb(spark: SparkSession, dir: String): DataFrame = {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_q_ivfindex_land").getAbsolutePath
+    val idxDir = graft.Scratch.dir("graft_q_ivfindex_land")
     IvfIndex.build(e.filter(col("vec_id") % 3 =!= 0), idxDir, "q_ivfidx_land",
       nCentroids = 8, seed = Similarity.ResidueSeed)
     // same single-freeze + concurrent-writers shape as [[queryAbsorb]]

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** Persistent shingle inverted index — build once, probe per batch.
   *
@@ -283,106 +283,128 @@ object ShingleIndex {
 
   /** Admit `newDocs` into the index without a rebuild.
     *
-    * Cost: O(newDocs shingles + stored rows for TOUCHED keys) — the df
-    * census joins the occ table only on the new batch's vocabulary. New
-    * occurrences are admitted per key iff existing df + new df ≤ cap
-    * (see the cap-semantics note on the object); sizes rows are the
-    * ADMITTED counts; fingerprints are anti-joined so the fp table stays
-    * distinct (a duplicated fp would fan out every future probe's left
-    * join). */
+    * Cost: O(newDocs shingles) on the driver plus one single-scan lookup
+    * job over what the batch touches. New occurrences are admitted per key iff
+    * stored df + new df ≤ cap (see the cap-semantics note on the object);
+    * sizes rows are the ADMITTED counts; fingerprints already stored are
+    * skipped so the fp table stays distinct (a duplicated fp would fan out
+    * every future probe's left join). `doc_id` must be unique within the
+    * batch and absent from the index — a repeat or a stored id fails
+    * loudly before any table is written. A batch of more than
+    * [[BucketedMaintenance.MaxAppendRows]] docs is appended as successive
+    * chunks of that size. */
   def append(spark: SparkSession, tag: String, path: String, newDocs: DataFrame,
              buckets: Int = 8,
-             maxShingleDf: Int = Dedup.DefaultMaxShingleDf): Unit =
-      LeaseLock.withTableLock(spark, tag) {
-    val occT = occTable(tag)
-    ensureSatTable(spark, tag) // pre-sat-version index migration
-    IndexCanary.check(spark, occT, sizesTable(tag), fpTable(tag), satTable(tag))
-    // a wrong `buckets` here cannot corrupt the index: Spark rejects an
-    // append whose bucket spec differs from the existing table's
-    val newOcc = org.apache.spark.sql.graft.CheckpointShim.statsHonestLocalCheckpoint(
-      Dedup.shingleRows(newDocs).withColumnRenamed("shingle", "key"))
-    val newDf = newOcc.groupBy("key").agg(count(lit(1)).as("new_df"))
-    val oldDf = spark.table(occT).join(newDf.select("key"), "key")
-      .groupBy("key").agg(count(lit(1)).as("old_df"))
-    // rejected keys are saturated: their true union df now exceeds the cap,
-    // which only a rebuild can reconcile — record them for overshootCensus.
-    // Anti-join keeps the sat table distinct across appends; materialized
-    // (checkpoint) BEFORE the write because the write appends to the very
-    // table the anti-join scans.
-    //
-    // Each table's delta is frozen (checkpoint) and appended under its OWN
-    // single-table [[BucketedMaintenance.guardedAppend]] with an EXACT
-    // survivorship probe. Round 8 wrapped all four writes in one
-    // multi-table guard with the file-count heuristic, whose thrown
-    // remedy ("re-run it") could duplicate the tables whose rows had
-    // survived (advisor r8): per-table survivorship diverges, and only a
-    // per-table exact probe + per-table retry resolves it without
-    // duplication. The four appends need no cross-table atomicity beyond
-    // what the old shape had — a crash mid-sequence leaves the same
-    // partial state either way, and each COMPLETED call is durable.
-    //
-    // r15 opt: the batch-delta materializations are INDEPENDENT action
-    // chains once their inputs exist — overlap them (guide §2.6; the
-    // sequential shape paid ~13 small driver-synchronized jobs per
-    // append): [dfCensus ∥ newFp] first (both need only newOcc/newDocs),
-    // then [newSat ∥ admitted] (both need dfCensus).
-    val ck = org.apache.spark.sql.graft.CheckpointShim
-    val fpAndCensus = Jobs.concurrently(Seq(
-      () => ck.statsHonestLocalCheckpoint(
-        newDf.join(oldDf, Seq("key"), "left")
-          .withColumn("admitted",
-            coalesce(col("old_df"), lit(0L)) + col("new_df") <= maxShingleDf)),
-      () => ck.statsHonestLocalCheckpoint(
-        newDocs
-          .select(Dedup.canonicalFp(coalesce(col("text"), lit(""))).as("fp")).distinct()
-          .join(spark.table(fpTable(tag)), Seq("fp"), "left_anti"))))
-    val (dfCensus, newFp) = (fpAndCensus(0), fpAndCensus(1))
-    val admittedKeys = dfCensus.filter(col("admitted")).select("key")
-    val satAndAdmitted = Jobs.concurrently(Seq(
-      () => ck.statsHonestLocalCheckpoint(
-        dfCensus.filter(!col("admitted")).select("key")
-          .join(spark.table(satTable(tag)), Seq("key"), "left_anti")),
-      () => ck.statsHonestLocalCheckpoint(
-        newOcc.join(admittedKeys, "key")
-          .select(col("key"), col("doc_id").as("corpus_id")))))
-    val (newSat, admitted) = (satAndAdmitted(0), satAndAdmitted(1))
-    // sat/fp batch keys are disjoint from their tables by the anti-joins
-    // above; occ/sizes by the new-documents contract (appending a doc_id
-    // already in the corpus is a caller bug). ALL FOUR probes run their
-    // eager disjointness asserts HERE, before the first guarded write —
-    // a rejected batch (e.g. a replay) leaves every table untouched, with
-    // no partial sat-then-abort state (advisor r9). The four probe jobs
-    // are read-only and independent — overlapped; then the four guarded
-    // writes target four DIFFERENT tables with per-table guards —
-    // overlapped too (r15 opt; a raced external compact still resolves
-    // per table exactly as in the sequential shape).
-    val batchDocs = admitted.select("corpus_id").distinct()
-    val probeOf = Jobs.concurrently(Seq(
-      (satTable(tag), newSat, "key"),
-      (occT, batchDocs, "corpus_id"),
-      (sizesTable(tag), batchDocs, "corpus_id"),
-      (fpTable(tag), newFp, "fp")).map { case (t, keys, kc) =>
-      () => t -> BucketedMaintenance.disjointBatchProbe(spark, t, keys, kc)
-    }).toMap
-    def guarded(table: String)(write: => Unit): Unit =
-      BucketedMaintenance.guardedAppend(spark, Seq(table),
-        rowsPresent = Some(probeOf(table)))(write)
-    Jobs.concurrently(Seq(
-      () => guarded(satTable(tag)) {
-        writeBucketed(newSat, satTable(tag), path, buckets, "key", SaveMode.Append)
-      },
-      () => guarded(occT) {
-        writeBucketed(admitted, occT, path, buckets, "key", SaveMode.Append)
-      },
-      () => guarded(sizesTable(tag)) {
-        writeBucketed(
-          admitted.groupBy("corpus_id").agg(count(lit(1)).as("nc")),
-          sizesTable(tag), path, buckets, "corpus_id", SaveMode.Append)
-      },
-      () => guarded(fpTable(tag)) {
-        writeBucketed(newFp, fpTable(tag), path, buckets, "fp", SaveMode.Append)
-      }))
+             maxShingleDf: Int = Dedup.DefaultMaxShingleDf): Unit = {
+    appendChunks(spark, tag, path, newDocs, buckets, maxShingleDf,
+      BucketedMaintenance.MaxAppendRows, dropPresent = false)
     ()
+  }
+
+  private val OccDeltaSchema = StructType(Seq(
+    StructField("corpus_id", LongType, nullable = false),
+    StructField("keys", ArrayType(LongType, containsNull = false), nullable = false)))
+  private val SizesSchema = StructType(Seq(
+    StructField("corpus_id", LongType, nullable = false),
+    StructField("nc", LongType, nullable = false)))
+  private val KeySchema = StructType(Seq(StructField("key", LongType, nullable = false)))
+  private val FpSchema = StructType(Seq(StructField("fp", StringType, nullable = false)))
+
+  /** [[append]] in chunks of at most `bound` docs. With `dropPresent`,
+    * docs whose `doc_id` the sizes table already holds are skipped instead
+    * of failing the call (the [[LandingZone]] crash-window replay). Returns
+    * (docs read, docs appended). */
+  private[graft] def appendChunks(spark: SparkSession, tag: String, path: String,
+                                  newDocs: DataFrame, buckets: Int, maxShingleDf: Int,
+                                  bound: Int, dropPresent: Boolean): (Long, Long) =
+      LeaseLock.withTableLock(spark, tag) {
+    ensureSatTable(spark, tag) // pre-sat-version index migration
+    IndexCanary.check(spark, occTable(tag), sizesTable(tag), fpTable(tag), satTable(tag))
+    var read = 0L
+    var appended = 0L
+    BucketedMaintenance.foreachChunk(newDocs.select(col("doc_id").cast("long"), col("text"),
+        Dedup.canonicalFp(coalesce(col("text"), lit(""))).as("fp")), bound) { chunk =>
+      read += chunk.length
+      appended += appendChunk(spark, tag, path, chunk, buckets, maxShingleDf, dropPresent)
+    }
+    (read, appended)
+  }
+
+  /** One chunk of `(doc_id, text, fp)` rows held on the driver. Its four
+    * lookups (already-present ids, stored df and sat hits of the chunk's
+    * keys, stored fingerprints) are legs of ONE scan job
+    * ([[BucketedMaintenance.storedCounts]]); the cap, the four deltas and
+    * the presence check are driver work; each table is then written from a
+    * one-partition
+    * local relation under its OWN single-table
+    * [[BucketedMaintenance.guardedAppend]] with an exact survivorship probe.
+    *
+    * Per-table guards, not one multi-table guard: survivorship of a raced
+    * append can diverge per table, and only a per-table exact probe and a
+    * per-table retry resolve it without duplication (a multi-table
+    * file-count guard's "re-run it" remedy could duplicate the tables
+    * whose rows survived). The four appends need no cross-table atomicity
+    * — a crash mid-sequence leaves a partial state either way, and each
+    * COMPLETED call is durable. The presence check runs before the first
+    * write, so a rejected batch (e.g. a replay) leaves every table
+    * untouched; sat and fp deltas are disjoint from their tables by
+    * construction (stored keys and fingerprints are skipped). */
+  private def appendChunk(spark: SparkSession, tag: String, path: String, chunk: Array[Row],
+                          buckets: Int, maxShingleDf: Int, dropPresent: Boolean): Long = {
+    val (occT, sizesT, fpT, satT) = (occTable(tag), sizesTable(tag), fpTable(tag), satTable(tag))
+    BucketedMaintenance.forgetListings(spark, Seq(occT, sizesT, fpT, satT))
+    val keysOf = chunk.map(r => r.getLong(0) -> Dedup.shingleKeys(r.getString(1))).toMap
+    val touched = keysOf.valuesIterator.flatten.toSet
+    val (Seq(present, storedDf, satHits), Seq(storedFps)) = BucketedMaintenance.storedCounts(spark,
+      Seq((sizesT, "corpus_id", keysOf.keys), (occT, "key", touched), (satT, "key", touched)),
+      Seq((fpT, "fp", chunk.map(_.getString(2)).toSeq)))
+    val fresh = BucketedMaintenance.freshRows(sizesT, chunk, present, dropPresent)
+    // forward cap: a key's occurrences are admitted iff its stored df plus
+    // the batch's df stays within the cap; rejected keys are saturated —
+    // their true union df now exceeds the cap, which only a rebuild can
+    // reconcile — and recorded once for overshootCensus
+    val newDf = fresh.iterator.flatMap(r => keysOf(r.getLong(0))).toSeq
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val admitted = newDf.collect {
+      case (k, n) if storedDf.getOrElse(k, 0L) + n <= maxShingleDf => k
+    }.toSet
+    val newSat = (newDf.keySet -- admitted -- satHits.keySet).toSeq
+    val occ = fresh.flatMap { r =>
+      val ks = keysOf(r.getLong(0)).filter(admitted)
+      Option.when(ks.nonEmpty)(r.getLong(0) -> ks)
+    }
+    val newFp = fresh.map(_.getString(2)).distinct.filterNot(storedFps.contains)
+    val ids = occ.map(_._1).toSeq
+    def local(schema: StructType, rows: Iterable[Row]) =
+      BucketedMaintenance.localRelation(spark, schema, rows.toSeq)
+    def guarded(table: String, probe: () => Boolean)(write: => Unit): () => Unit =
+      () => BucketedMaintenance.guardedAppend(spark, Seq(table), rowsPresent = Some(probe))(write)
+    // four DIFFERENT tables, per-table guards — overlapped (a raced
+    // external compact still resolves per table as in a sequential shape)
+    Jobs.concurrently(Seq(
+      Option.when(newSat.nonEmpty)(guarded(satT,
+          BucketedMaintenance.holdsAll(spark, satT, "key", newSat)) {
+        writeBucketed(local(KeySchema, newSat.map(Row(_))), satT, path, buckets, "key",
+          SaveMode.Append)
+      }),
+      Option.when(occ.nonEmpty)(guarded(occT,
+          BucketedMaintenance.holdsAll(spark, occT, "corpus_id", ids)) {
+        writeBucketed(
+          local(OccDeltaSchema, occ.map { case (id, ks) => Row(id, ks.toSeq) })
+            .select(explode(col("keys")).as("key"), col("corpus_id")),
+          occT, path, buckets, "key", SaveMode.Append)
+      }),
+      Option.when(occ.nonEmpty)(guarded(sizesT,
+          BucketedMaintenance.holdsAll(spark, sizesT, "corpus_id", ids)) {
+        writeBucketed(local(SizesSchema, occ.map { case (id, ks) => Row(id, ks.length.toLong) }),
+          sizesT, path, buckets, "corpus_id", SaveMode.Append)
+      }),
+      Option.when(newFp.nonEmpty)(guarded(fpT, () => BucketedMaintenance.storedCounts(spark,
+          Seq.empty, Seq((fpT, "fp", newFp.toSeq)))._2.head.size == newFp.length) {
+        writeBucketed(local(FpSchema, newFp.map(Row(_))), fpT, path, buckets, "fp",
+          SaveMode.Append)
+      })).flatten)
+    fresh.length.toLong
   }
 
   /** Re-apply exact build semantics (un-does append's bounded cap

@@ -199,8 +199,7 @@ object VectorIngestGate {
                 threshold: Double = 0.9, nprobe: Int = 4): DataFrame = {
     import graft.operators.Similarity
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_q_vecgate").getAbsolutePath
+    val idxDir = graft.Scratch.dir("graft_q_vecgate")
     IvfIndex.build(e, idxDir, "q_vecgate", nCentroids = 8, seed = Similarity.ResidueSeed)
     val arrivals = e.filter(col("vec_id") < 40).select(
       (col("vec_id") + 10000000L).as("vec_id"),

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.ScaleCorpus [srcDir] [factor] [genDir]
   * (defaults /root/testdata/sf0.1, 10, /tmp/graft_scale<factor>x); the
-  * other tables a query reads are not replicated.
+  * other tables are not replicated but linked from srcDir, so genDir is
+  * a complete sf directory.
   */
 object ScaleCorpus {
 
@@ -85,6 +86,23 @@ object ScaleCorpus {
     }
   }
 
+  /** Symbolic links in `out` to every other table of `src` (the ones the
+    * generator does not replicate), so `out` reads as a complete sf
+    * directory: a query over it finds those tables, and the schema canary
+    * checks them instead of reporting each one unreadable. Local paths. */
+  private[graft] def linkOtherTables(src: String, out: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val from = Paths.get(src).toAbsolutePath
+    val listing = Files.list(from)
+    try listing.iterator().forEachRemaining { t =>
+      val name = t.getFileName.toString
+      val link = Paths.get(out, name)
+      if (name.endsWith(".parquet") && !Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+        Files.createSymbolicLink(link, t)
+    }
+    finally listing.close()
+  }
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
@@ -92,6 +110,7 @@ object ScaleCorpus {
     val spark = Harness.session()
     generateDocs(spark, src, factor, gen)
     generateEmbeddings(spark, src, factor, gen)
+    linkOtherTables(src, gen)
     println(s"[scale] wrote the ${factor}x corpus to $gen")
     spark.stop()
   }

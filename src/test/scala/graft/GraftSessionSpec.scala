@@ -45,4 +45,23 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(builders.isEmpty,
       s"build the session through graft.tools.Harness.session (or GraftSession): $builders")
   }
+
+  test("only Scratch names a directory under java.io.tmpdir in src/main") {
+    // a fixed name under the shared temp dir collides across JVMs: Verify
+    // and Bench side by side rebuilt each other's q_ivf_pq index files
+    // (FILE_NOT_EXIST); run-scoped state goes under Scratch.dir instead
+    val allowed = Set("src/main/scala/graft/Scratch.scala")
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sites = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(_.toString)
+      .filterNot(allowed)
+      .flatMap { p =>
+        new String(Files.readAllBytes(Paths.get(p)), StandardCharsets.UTF_8)
+          .linesIterator.zipWithIndex
+          .collect { case (l, i) if l.contains("java.io.tmpdir") => s"$p:${i + 1}" }
+      }.toList
+    finally walk.close()
+    assert(sites.isEmpty, s"put run-scoped directories under graft.Scratch.dir: $sites")
+  }
 }

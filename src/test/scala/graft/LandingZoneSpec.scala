@@ -184,6 +184,74 @@ class LandingZoneSpec extends AnyFunSuite {
     assert(probe.filter(col("exact_dup")).count() == 5)
   }
 
+  test("a landing zone over the append bound absorbs in chunks: same answers as one chunk, then a no-op") {
+    import graft.operators.{IvfIndex, Similarity}
+    val root = tmp("graft-land-chunks")
+    val vroot = tmp("graft-vland-chunks")
+    val idxDir = tmp("graft-land-chunks-idx")
+    val schema = docs(0 until 1, "x").schema
+    (0 until 3).foreach { w =>
+      ManifestLog.append(docs(3000 + w * 20 until 3020 + w * 20, s"w$w"), root, s"w$w", 0L)
+      ManifestLog.append(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 9 === w * 3),
+        vroot, s"w$w", 0L)
+    }
+    val batch = docs(3000 until 3010, "w0").union(docs(900 until 905, "w2"))
+    val queries = emb.filter(col("vec_id") < 30)
+    try {
+      // the same landing zone into two indexes over the same base: one in
+      // chunks of 7 (60 docs -> 9 chunks), one in a single chunk
+      val answers = Seq(("lz_chunked", "lzv_chunked", 7), ("lz_whole", "lzv_whole", 1000))
+        .map { case (tag, vtag, bound) =>
+          ShingleIndex.build(docs(0 until 40, "base"), s"$idxDir/$tag", tag)
+          IvfIndex.build(emb.filter(col("vec_id") % 3 =!= 0), s"$idxDir/$vtag", vtag,
+            nCentroids = 8, seed = Similarity.ResidueSeed)
+          // fresh consumed markers per index: the log itself is shared
+          Seq(root, vroot).foreach(r => new org.apache.hadoop.fs.Path(LandingZone.consumedDir(r))
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(new org.apache.hadoop.fs.Path(LandingZone.consumedDir(r)), true))
+          val r = LandingZone.absorbIntoShingleIndex(spark, root, schema, tag,
+            s"$idxDir/$tag", 8, Dedup.DefaultMaxShingleDf, bound)
+          val v = LandingZone.absorbIntoIvfIndex(spark, vroot, emb.schema, vtag, bound)
+          assert((r.landedDocs, r.freshDocs) == (60L, 60L), s"$r")
+          assert(v.landedDocs == v.freshDocs && v.freshDocs > 7, s"$v")
+          // a second absorb is a no-op
+          val again = LandingZone.absorbIntoShingleIndex(spark, root, schema, tag,
+            s"$idxDir/$tag", 8, Dedup.DefaultMaxShingleDf, bound)
+          assert(again.segments.isEmpty && again.freshDocs == 0, s"$again")
+          (ShingleIndex.probe(spark, tag, batch).orderBy("doc_id").collect().toSeq,
+            Seq(ShingleIndex.occTable(tag), ShingleIndex.sizesTable(tag),
+              ShingleIndex.fpTable(tag)).map(spark.table(_).count()),
+            IvfIndex.search(spark, vtag, queries, nprobe = 2).collect().toSeq)
+        }
+      assert(answers(0) == answers(1), "chunked and one-chunk absorbs must leave the same index")
+    } finally {
+      Seq("lz_chunked", "lz_whole").foreach(t => Seq(ShingleIndex.occTable(t),
+        ShingleIndex.sizesTable(t), ShingleIndex.fpTable(t), ShingleIndex.satTable(t))
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x")))
+      Seq("lzv_chunked", "lzv_whole").foreach(dropIvf)
+    }
+  }
+
+  test("a doc_id landed twice fails the absorb loudly, across a chunk boundary too") {
+    val root = tmp("graft-land-dupid")
+    val idxDir = tmp("graft-land-dupid-idx")
+    val schema = docs(0 until 1, "x").schema
+    ShingleIndex.build(docs(0 until 30, "base"), idxDir, "lz_dupid")
+    // two writers land doc 4005 (the caller contract forbids it)
+    ManifestLog.append(docs(4000 until 4006, "w0"), root, "w0", 0L)
+    ManifestLog.append(docs(4005 until 4010, "w1"), root, "w1", 0L)
+    try Seq(1000, 6, 2).foreach { bound => // one chunk; the copies split; every chunk
+      val e = intercept[IllegalArgumentException] {
+        LandingZone.absorbIntoShingleIndex(spark, root, schema, "lz_dupid", idxDir, 8,
+          Dedup.DefaultMaxShingleDf, bound)
+      }
+      assert(e.getMessage.contains("unique"), s"bound $bound: ${e.getMessage}")
+      assert(LandingZone.pendingSegments(spark, root).size == 2, "nothing consume-marked")
+    } finally Seq(ShingleIndex.occTable("lz_dupid"), ShingleIndex.sizesTable("lz_dupid"),
+      ShingleIndex.fpTable("lz_dupid"), ShingleIndex.satTable("lz_dupid"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("absorb refuses an unbuilt index loudly") {
     val root = tmp("graft-land-unbuilt")
     ManifestLog.append(docs(0 until 5, "x"), root, "w0", 0L)

@@ -280,27 +280,46 @@ class MaintenanceGuardSpec extends AnyFunSuite {
     // satisfy the probe even after a raced append's rows died with a
     // compacted generation. The disjointness is therefore a hard require
     // at the append entry — a replay errors at the call site, with the
-    // table unchanged.
+    // tables unchanged. Two inputs: the IVF index (vec_ids), and the
+    // shingle index (doc_ids, checked before any of its four tables is
+    // written — a replay mixed with fresh docs writes nothing either).
+    def rejectsReplay(tables: Seq[String])(replay: => Unit)(fresh: => Unit): Seq[Long] = {
+      def counts() = {
+        tables.foreach(spark.catalog.refreshTable)
+        tables.map(spark.table(_).count())
+      }
+      val before = counts()
+      val ex = intercept[IllegalArgumentException](replay)
+      assert(ex.getMessage.contains("already present"), ex.getMessage)
+      assert(counts() == before, "the rejected replay must not have written anything")
+      // a genuinely fresh batch still appends fine after the rejection
+      fresh
+      counts().zip(before).map { case (a, b) => a - b }
+    }
     val dir = Files.createTempDirectory("graft-replay").toString
     val tag = "replayivf"
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     try {
       IvfIndex.build(emb.filter(col("vec_id") < 200), dir, tag,
         nCentroids = 4, seed = Similarity.ResidueSeed)
-      val before = spark.table(IvfIndex.assignTable(tag)).count()
-      val replay = emb.filter(col("vec_id") < 10) // already stored
-      val ex = intercept[IllegalArgumentException] {
-        IvfIndex.assignInto(spark, tag, replay)
-      }
-      assert(ex.getMessage.contains("already present"), ex.getMessage)
-      spark.catalog.refreshTable(IvfIndex.assignTable(tag))
-      assert(spark.table(IvfIndex.assignTable(tag)).count() == before,
-        "the rejected replay must not have written anything")
-      // a genuinely fresh batch still appends fine after the rejection
-      IvfIndex.assignInto(spark, tag,
-        emb.filter(col("vec_id") >= 200 && col("vec_id") < 210))
-      assert(spark.table(IvfIndex.assignTable(tag)).count() == before + 10)
+      val grown = rejectsReplay(Seq(IvfIndex.assignTable(tag)))(
+        IvfIndex.assignInto(spark, tag, emb.filter(col("vec_id") < 10)))( // already stored
+        IvfIndex.assignInto(spark, tag,
+          emb.filter(col("vec_id") >= 200 && col("vec_id") < 210)))
+      assert(grown == Seq(10L))
     } finally dropIvf(tag)
+    val stag = "replaysh"
+    val tables = Seq(ShingleIndex.occTable(stag), ShingleIndex.sizesTable(stag),
+      ShingleIndex.fpTable(stag), ShingleIndex.satTable(stag))
+    try {
+      ShingleIndex.build(docs.filter(col("doc_id") % 5 =!= 0), dir, stag)
+      val fresh = docs.filter(col("doc_id") % 5 === 0 && col("doc_id") < 100)
+      val grown = rejectsReplay(tables)(
+        ShingleIndex.append(spark, stag, dir,
+          fresh.unionByName(docs.filter(col("doc_id") === 1))))( // doc 1 is stored
+        ShingleIndex.append(spark, stag, dir, fresh))
+      assert(grown(0) > 0 && grown(1) == fresh.count(), s"occ/sizes rows added: $grown")
+    } finally dropShingle(stag)
   }
 
   test("shingle append: per-table guards give duplicate-free absorbed-by-compact handling") {

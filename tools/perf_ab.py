@@ -7,7 +7,9 @@
 Runs `perfbench/run.py` from each checkout once per seed, alternating which
 side goes first from pair to pair (host drift then hits both sides alike),
 and prints for every metric: each run's value and run wall, each side's
-median and quartiles, and the paired win count. A claim holds when the
+median and quartiles, and the paired win count. Each run's wall is printed
+with the host state perfbench recorded for it (end load average, CPU steal
+share), so a contended pair shows as such. A claim holds when the
 change wins at least 9 of every 10 pairs and the medians differ by more
 than the base's interquartile range. Metric directions come from the
 change checkout's BENCHMARK.json; metrics it does not list are printed
@@ -39,7 +41,18 @@ def run(checkout, workload, seed, seconds, trace):
         r = json.loads(lines[-1])
     except (ValueError, IndexError):
         sys.exit(f"{checkout} seed {seed}: no result (exit {out.returncode})\n{out.stderr[-2000:]}")
-    return r, wall
+    return r, wall, host(lines)
+
+
+def host(lines):
+    """The run's host state from perfbench's `host` line: the 1-minute load
+    average at the end of the run and the CPU steal share over it, e.g.
+    "load 3.9 steal 0.4%" ("host n/a" when the line is absent)."""
+    for line in reversed(lines):
+        if line.startswith("host "):
+            kv = dict(f.split("=", 1) for f in line.split()[1:] if "=" in f)
+            return f"load {kv.get('loadavg_end', 'n/a').split(',')[0]} steal {kv.get('steal_pct', 'n/a')}%"
+    return "host n/a"
 
 
 def quartiles(vals):
@@ -64,23 +77,25 @@ def main():
     runs = {"base": [], "change": []}
     for i, s in enumerate(seeds(a.seeds)):
         for side in (("base", "change") if i % 2 == 0 else ("change", "base")):
-            r, wall = run(sides[side], a.workload, s, a.seconds, a.trace)
-            runs[side].append((s, r, wall))
-            print(f"pair {i + 1} seed {s} {side:6s} wall={wall:5.1f}s correct={r['correct']} "
+            r, wall, h = run(sides[side], a.workload, s, a.seconds, a.trace)
+            runs[side].append((s, r, wall, h))
+            print(f"pair {i + 1} seed {s} {side:6s} wall={wall:5.1f}s {h} correct={r['correct']} "
                   f"failed={r['failed']}/{r['attempted']}", flush=True)
     n = len(runs["base"])
     need = math.ceil(0.9 * n)
-    walls = {side: [w for _, _, w in runs[side]] for side in runs}
+    walls = {side: [w for _, _, w, _ in runs[side]] for side in runs}
+    hosts = {side: [h for _, _, _, h in runs[side]] for side in runs}
     print(f"\n{a.workload}: {n} pairs, seeds {a.seeds}, --seconds {a.seconds}, --trace {a.trace}")
     print(f"run wall  base median {statistics.median(walls['base']):.1f}s  "
           f"change median {statistics.median(walls['change']):.1f}s")
-    names = [m for m in runs["base"][0][1]["metrics"] if all(m in r["metrics"] for _, r, _ in runs["change"])]
+    names = [m for m in runs["base"][0][1]["metrics"] if all(m in r["metrics"] for _, r, _, _ in runs["change"])]
     for m in names:
-        vals = {side: [r["metrics"][m]["value"] for _, r, _ in runs[side]] for side in runs}
+        vals = {side: [r["metrics"][m]["value"] for _, r, _, _ in runs[side]] for side in runs}
         print(f"\n{m}")
         for j in range(n):
-            print(f"  seed {runs['base'][j][0]:>5}  base {vals['base'][j]:12.5g} ({walls['base'][j]:5.1f}s)"
-                  f"  change {vals['change'][j]:12.5g} ({walls['change'][j]:5.1f}s)")
+            print(f"  seed {runs['base'][j][0]:>5}"
+                  f"  base {vals['base'][j]:12.5g} ({walls['base'][j]:5.1f}s, {hosts['base'][j]})"
+                  f"  change {vals['change'][j]:12.5g} ({walls['change'][j]:5.1f}s, {hosts['change'][j]})")
         for side in ("base", "change"):
             q1, q3 = quartiles(vals[side])
             print(f"  {side:6s} median {statistics.median(vals[side]):12.5g}  q1 {q1:12.5g}  q3 {q3:12.5g}")
