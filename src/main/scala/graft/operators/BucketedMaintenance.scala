@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Shared compaction for append-accreted BUCKETED catalog tables — the
   * staged-swap rewrite used by [[ShingleIndex.compact]] and
@@ -345,107 +346,209 @@ object BucketedMaintenance {
     * [[ImiIndex.assignInto]] and the [[LandingZone]] absorbs that feed
     * them). A larger input is appended as successive chunks of this many
     * rows by the same code — for the shingle index that is the forward-cap
-    * contract of successive appends. At 10k documents of ~100 shingles a
-    * chunk's occurrence delta is ~8 MB of keys on the driver. */
-  val MaxAppendRows: Int = 10 * 1000
+    * contract of successive appends. Each chunk's lookup scans the probed
+    * index columns once, so the bound sets how often a large absorb
+    * rescans the index. At 50k documents of ~100 shingles a chunk's keys
+    * are ~40 MB of longs on the driver, and its key set and counts, all
+    * primitive arrays, about as much again. */
+  val MaxAppendRows: Int = 50 * 1000
+
+  /** Vectors one task of a vector append assigns and writes: an
+    * arrival-sized append writes in one task (at most one file per
+    * bucket); a bound-sized chunk spreads over the session's cores. */
+  private val VectorsPerWriteTask = 10 * 1000
 
   /** Feed `rows` to `f` in chunks of at most `bound` rows, ascending by
     * their first column, a non-null unique long id. One ordered-limit
     * collect per chunk, so an input of fewer than `bound` rows costs one
-    * job and the driver never holds more than `bound` rows. A full chunk
-    * is followed by a collect from its last id INCLUSIVE: that one carried
-    * row is dropped, and a second row with the same id — the duplicate an
-    * exclusive bound would silently skip — fails like any other repeat. */
+    * job and the driver never holds more than `bound` + 1 rows. A larger
+    * input is read once more after its first chunk, into a cache of the
+    * rows past that chunk that the later chunks' collects scan instead of
+    * re-reading (and re-projecting) the input; it is dropped on return. A
+    * full chunk is followed by a collect of `bound` + 1 rows from its last
+    * id INCLUSIVE: that one carried row is dropped, and a second row with
+    * the same id — the duplicate an exclusive bound would silently skip —
+    * fails like any other repeat. */
   private[graft] def foreachChunk(rows: DataFrame, bound: Int)(f: Array[Row] => Unit): Unit = {
     require(bound >= 2, s"chunk bound must be at least 2, got $bound")
     val id = rows.columns.head
     val dupMsg = s"$id must be unique within a batch"
     var from: Option[Long] = None
-    var more = true
-    while (more) {
-      val raw = from.fold(rows)(l => rows.filter(col(id) >= l))
-        .coalesce(rows.sparkSession.sparkContext.defaultParallelism)
-        .orderBy(id).limit(bound).collect()
-      require(!raw.exists(_.isNullAt(0)), s"$id must not be NULL")
-      more = raw.length == bound
-      val chunk = from.fold(raw) { l =>
-        require(raw.count(_.getLong(0) == l) <= 1, dupMsg)
-        raw.filter(_.getLong(0) != l)
+    var rest: Option[DataFrame] = None
+    try {
+      var more = true
+      while (more) {
+        val take = bound + from.size
+        val raw = from.fold(rows)(l => rest.get.filter(col(id) >= l))
+          .orderBy(id).limit(take).collect()
+        require(!raw.exists(_.isNullAt(0)), s"$id must not be NULL")
+        more = raw.length == take
+        val chunk = from.fold(raw) { l =>
+          require(raw.count(_.getLong(0) == l) <= 1, dupMsg)
+          raw.filter(_.getLong(0) != l)
+        }
+        require(chunk.iterator.map(_.getLong(0)).distinct.size == chunk.length, dupMsg)
+        if (chunk.nonEmpty) {
+          f(chunk)
+          from = Some(chunk.last.getLong(0))
+          if (more && rest.isEmpty)
+            rest = Some(rows.filter(col(id) >= from.get).persist(StorageLevel.MEMORY_AND_DISK))
+        }
       }
-      require(chunk.iterator.map(_.getLong(0)).distinct.size == chunk.length, dupMsg)
-      if (chunk.nonEmpty) {
-        f(chunk)
-        from = Some(chunk.last.getLong(0))
+    } finally rest.foreach(_.unpersist(blocking = true))
+  }
+
+  /** The keys of one lookup leg as an open-addressing hash set whose slot
+    * numbers index the leg's per-key counts ([[LongCounts]]) and any
+    * per-key array a caller keeps beside them. A filter of ~8 bits per key
+    * in front of the slots answers most misses from a cache-sized bit
+    * array; nothing is boxed. */
+  private[graft] final class LongSet(keys: Iterable[Long]) extends Serializable {
+    private val n = math.max(2, keys.size)
+    private val mask = Integer.highestOneBit(n + n / 2) * 2 - 1
+    private val slots = new Array[Long](mask + 1) // 0 marks a free slot
+    private val bitMask = Integer.highestOneBit(math.min(n, 1 << 26) * 8) * 2 - 1
+    private val bits = new Array[Long]((bitMask >>> 6) + 1)
+    private var zero = false
+    private var held = 0
+    /** Distinct keys held. */
+    def size: Int = held
+    /** Slots are numbered from 0 until `capacity`; the key 0 has the last. */
+    def capacity: Int = mask + 2
+    private def mix(k: Long): Long = {
+      val h = k * 0x9E3779B97F4A7C15L
+      h ^ (h >>> 29)
+    }
+    keys.foreach { k =>
+      if (k == 0L) { if (!zero) held += 1; zero = true }
+      else {
+        val h = mix(k)
+        val b = (h >>> 32).toInt & bitMask
+        bits(b >>> 6) |= 1L << b
+        var i = h.toInt & mask
+        while (slots(i) != 0L && slots(i) != k) i = (i + 1) & mask
+        if (slots(i) == 0L) { slots(i) = k; held += 1 }
       }
     }
+    /** The slot of `k`, or -1 when the set lacks it. */
+    def slotOf(k: Long): Int =
+      if (k == 0L) { if (zero) mask + 1 else -1 }
+      else {
+        val h = mix(k)
+        val b = (h >>> 32).toInt & bitMask
+        if ((bits(b >>> 6) & (1L << b)) == 0L) -1
+        else {
+          var i = h.toInt & mask
+          while (slots(i) != 0L && slots(i) != k) i = (i + 1) & mask
+          if (slots(i) == k) i else -1
+        }
+      }
+    /** The key in `slot`, a slot some key holds. */
+    def keyAt(slot: Int): Long = if (slot == mask + 1) 0L else slots(slot)
+  }
+
+  /** How many stored rows hold each key of `set`, by slot. */
+  private[graft] final class LongCounts(val set: LongSet, counts: Array[Long]) {
+    def at(slot: Int): Long = counts(slot)
+    def apply(k: Long): Long = {
+      val s = set.slotOf(k)
+      if (s < 0) 0L else counts(s)
+    }
+    def contains(k: Long): Boolean = apply(k) > 0L
+    /** The keys of `set` some stored row holds. */
+    def keys: Iterator[Long] = Iterator.range(0, counts.length).filter(counts(_) > 0L).map(set.keyAt)
+    def size: Int = counts.count(_ > 0L)
   }
 
   /** How many rows of `table` hold each of `keys` in the long column
-    * `column` (keys it does not hold are absent) — the lookup a
-    * driver-assembled append makes for what its batch touches. */
+    * `column` — the lookup a driver-assembled append makes for what its
+    * batch touches. */
   private[graft] def storedCounts(spark: SparkSession, table: String, column: String,
-                                  keys: Iterable[Long]): Map[Long, Long] =
+                                  keys: LongSet): LongCounts =
     storedCounts(spark, Seq((table, column, keys)), Seq.empty)._1.head
 
   /** Several [[storedCounts]] lookups — long-keyed legs, then string-keyed
-    * legs, each `(table, column, keys)` — in ONE scan job with no exchange:
-    * the legs' one-column scans are unioned, run as the plan's row RDD
-    * coalesced to the session's parallelism (an accreted bucketed table is
-    * a task per file otherwise), the sorted key sets ride one broadcast
-    * variable (no job), each task counts its hits and the driver merges
-    * them. A literal IN list of ~10k
-    * keys costs seconds to plan, a broadcast join pays a job for the
-    * broadcast itself, and each separate action pays the scheduler's
-    * per-job cost again. Returns the legs' counts in order. */
+    * legs, each `(table, column, keys)` — in ONE job with no exchange: each
+    * table is scanned once for the columns its legs probe, as its plan's
+    * row RDD; the scans are unioned, the key sets ride one broadcast
+    * variable (no job), each task counts its hits (per slot for a long leg)
+    * and the driver sums them. A literal IN list of ~10k keys costs seconds
+    * to plan, a broadcast join pays a job for the broadcast itself, and
+    * each separate action pays the scheduler's per-job cost again. Returns
+    * the legs' counts in order. */
   private[graft] def storedCounts(spark: SparkSession,
-                                  longs: Seq[(String, String, Iterable[Long])],
+                                  longs: Seq[(String, String, LongSet)],
                                   strings: Seq[(String, String, Iterable[String])])
-  : (Seq[Map[Long, Long]], Seq[Map[String, Long]]) = {
-    val lk = longs.map(_._3.toArray.distinct.sorted)
-    val sk = strings.map(_._3.toArray.distinct.sorted)
-    val scans =
-      longs.zip(lk).zipWithIndex.collect { case (((t, c, _), ks), leg) if ks.nonEmpty =>
-        spark.table(t).select(lit(leg).as("leg"), col(c).cast("long").as("l"),
-          lit(null).cast("string").as("s"))
-      } ++ strings.zip(sk).zipWithIndex.collect { case (((t, c, _), ks), leg) if ks.nonEmpty =>
-        spark.table(t).select(lit(longs.length + leg).as("leg"), lit(0L).as("l"),
-          col(c).cast("string").as("s"))
+  : (Seq[LongCounts], Seq[Map[String, Long]]) = {
+    val lk = longs.map(_._3).toArray
+    val sk = strings.map { l =>
+      val set = new java.util.HashSet[String]()
+      l._3.foreach(set.add)
+      set
+    }.toArray
+    val nl = lk.length
+    // (table, column, leg) of each leg with keys; legs from nl on are string-keyed
+    val legs = longs.zipWithIndex.collect { case ((t, c, ks), i) if ks.size > 0 => (t, c, i) } ++
+      strings.zip(sk).zipWithIndex.collect {
+        case (((t, c, _), ks), i) if !ks.isEmpty => (t, c, nl + i)
       }
-    val hits = if (scans.isEmpty) Array.empty[(Int, Long, String, Long)] else {
+    val longCounts = lk.map(set => new Array[Long](set.capacity))
+    val stringCounts = sk.map(_ => scala.collection.mutable.HashMap.empty[String, Long])
+    if (legs.nonEmpty) {
       val sc = spark.sparkContext
-      val keys = sc.broadcast((lk.toArray, sk.toArray))
+      val keys = sc.broadcast((lk, sk))
       // names the job's stage after the looked-up tables
-      sc.setCallSite("lookup " + (longs ++ strings).map(l => s"${l._1}.${l._2}").mkString(", "))
-      try scans.reduce(_ unionAll _).queryExecution.toRdd.coalesce(sc.defaultParallelism)
-        .mapPartitions { rows =>
+      sc.setCallSite("lookup " + legs.map(l => s"${l._1}.${l._2}").mkString(", "))
+      try sc.union(legs.groupBy(_._1).toSeq.map { case (t, ls) =>
+        val cols = ls.map(_._2).distinct
+        def isLong(c: String) = ls.exists(l => l._2 == c && l._3 < nl)
+        val rows = spark.table(t)
+          .select(cols.map(c => col(c).cast(if (isLong(c)) "long" else "string")): _*)
+          .queryExecution.toRdd
+        val legOf = ls.map(_._3).toArray
+        val colOf = ls.map(l => cols.indexOf(l._2)).toArray
+        rows.mapPartitions { it =>
           val (ls, ss) = keys.value
-          val n = scala.collection.mutable.HashMap.empty[(Int, Long, String), Long]
-          rows.foreach { r =>
-            val leg = r.getInt(0)
-            val hit =
-              if (leg < ls.length) {
-                val l = r.getLong(1)
-                if (java.util.Arrays.binarySearch(ls(leg), l) >= 0) (leg, l, null) else null
-              } else {
-                val v = r.getUTF8String(2).toString
-                if (java.util.Arrays.binarySearch(
-                    ss(leg - ls.length).asInstanceOf[Array[AnyRef]], v) >= 0) (leg, 0L, v)
-                else null
+          val hits = legOf.map(l => if (l < nl) new Array[Int](ls(l).capacity) else null)
+          val found = legOf.map(_ => scala.collection.mutable.HashMap.empty[String, Long])
+          it.foreach { r =>
+            var j = 0
+            while (j < legOf.length) {
+              val (leg, i) = (legOf(j), colOf(j))
+              if (!r.isNullAt(i)) {
+                if (leg < nl) {
+                  val slot = ls(leg).slotOf(r.getLong(i))
+                  if (slot >= 0) hits(j)(slot) += 1
+                } else {
+                  val v = r.getUTF8String(i).toString
+                  if (ss(leg - nl).contains(v)) found(j)(v) = found(j).getOrElse(v, 0L) + 1L
+                }
               }
-            if (hit != null) n(hit) = n.getOrElse(hit, 0L) + 1L
+              j += 1
+            }
           }
-          n.iterator.map { case ((leg, l, v), c) => (leg, l, v, c) }
-        }.collect()
+          // per leg: the hit slots and their counts, or the hit strings
+          Iterator.tabulate(legOf.length) { j =>
+            if (hits(j) == null) (legOf(j), Array.empty[Int], found(j).values.toArray, found(j).keys.toArray)
+            else {
+              val slots = Array.range(0, hits(j).length).filter(hits(j)(_) > 0)
+              (legOf(j), slots, slots.map(hits(j)(_).toLong), Array.empty[String])
+            }
+          }
+        }
+      }).collect().foreach { case (leg, slots, counts, strs) =>
+        if (leg < nl) slots.indices.foreach(k => longCounts(leg)(slots(k)) += counts(k))
+        else strs.indices.foreach { k =>
+          val m = stringCounts(leg - nl)
+          m(strs(k)) = m.getOrElse(strs(k), 0L) + counts(k)
+        }
+      }
       finally {
         sc.clearCallSite()
         keys.destroy()
       }
     }
-    val byLeg = hits.groupBy(_._1)
-    def counts[K](leg: Int, key: ((Int, Long, String, Long)) => K): Map[K, Long] =
-      byLeg.getOrElse(leg, Array.empty).groupMapReduce(key)(_._4)(_ + _)
-    (longs.indices.map(counts(_, _._2)),
-      strings.indices.map(i => counts(longs.length + i, _._3)))
+    (lk.indices.map(i => new LongCounts(lk(i), longCounts(i))), stringCounts.map(_.toMap).toSeq)
   }
 
   /** The rows of `chunk` (first column: the id) whose id `table` does not
@@ -457,30 +560,40 @@ object BucketedMaintenance {
     * and would let the exact survivorship probe of [[guardedAppend]] read
     * a raced append whose rows died with a compacted generation as
     * durable — silent row loss. */
-  private[graft] def freshRows(table: String, chunk: Array[Row], present: Map[Long, Long],
+  private[graft] def freshRows(table: String, chunk: Array[Row], present: LongCounts,
                                dropPresent: Boolean): Array[Row] =
     if (dropPresent) chunk.filterNot(r => present.contains(r.getLong(0)))
     else {
-      require(present.isEmpty,
-        s"append into `$table`: ${present.size} batch ids are already present — " +
+      val n = present.size
+      require(n == 0,
+        s"append into `$table`: $n batch ids are already present — " +
           "re-appending stored ids would duplicate index rows and break the " +
           "append guard's survivorship probe. Deduplicate the batch against " +
           "the table (anti-join) before appending.")
       chunk
     }
 
-  /** Exact survivorship probe for [[guardedAppend]]: `table` holds every
-    * one of `ids` in `column`. Exact because the ids were absent before the
-    * append ([[freshRows]]); evaluated only when a compact raced it. */
-  private[graft] def holdsAll(spark: SparkSession, table: String, column: String,
-                              ids: Seq[Long]): () => Boolean =
-    () => storedCounts(spark, table, column, ids).size == ids.distinct.size
+  /** Exact survivorship probe for [[guardedAppend]]: each leg's table
+    * holds every one of its keys — legs as in [[storedCounts]], which runs
+    * them. Exact because the keys were absent before the append (ids by
+    * [[freshRows]], derived keys by construction); evaluated only when a
+    * compact raced it. */
+  private[graft] def holdsAll(spark: SparkSession,
+                              longs: Seq[(String, String, Iterable[Long])] = Seq.empty,
+                              strings: Seq[(String, String, Iterable[String])] = Seq.empty)
+  : () => Boolean = () => {
+    val (l, s) = storedCounts(spark, longs.map { case (t, c, ks) => (t, c, new LongSet(ks)) },
+      strings)
+    l.forall(c => c.size == c.set.size) &&
+      s.zip(strings).forall { case (m, (_, _, ks)) => m.size == ks.toSet.size }
+  }
 
   /** The vector indexes' append: `vecs` — `(vec_id, embedding)` — in
     * chunks of at most `bound` rows, each checked against the ids `table`
-    * already holds ([[freshRows]]) and handed to `write` as a one-partition
-    * local relation under a single-table [[guardedAppend]] with the exact
-    * [[holdsAll]] probe. Per chunk: one collect, one lookup, one write.
+    * already holds ([[freshRows]]) and handed to `write` as a local
+    * relation (a partition per [[VectorsPerWriteTask]] vectors) under a
+    * single-table [[guardedAppend]] with the exact [[holdsAll]] probe. Per
+    * chunk: one collect, one lookup, one write.
     * Returns (rows read, rows appended). */
   private[graft] def appendVectors(spark: SparkSession, table: String, vecs: DataFrame,
                                    bound: Int, dropPresent: Boolean)(
@@ -491,11 +604,12 @@ object BucketedMaintenance {
       read += chunk.length
       forgetListings(spark, Seq(table))
       val rows = freshRows(table, chunk,
-        storedCounts(spark, table, "vec_id", chunk.map(_.getLong(0))), dropPresent)
+        storedCounts(spark, table, "vec_id", new LongSet(chunk.map(_.getLong(0)))), dropPresent)
       if (rows.nonEmpty) {
         guardedAppend(spark, Seq(table),
-          rowsPresent = Some(holdsAll(spark, table, "vec_id", rows.map(_.getLong(0)).toSeq))) {
-          write(localRelation(spark, vecs.schema, rows.toSeq))
+          rowsPresent = Some(holdsAll(spark, Seq((table, "vec_id", rows.map(_.getLong(0)).toSeq))))) {
+          write(localRelation(spark, vecs.schema, rows.toSeq, math.min(
+            spark.sparkContext.defaultParallelism, 1 + rows.length / VectorsPerWriteTask)))
         }
         appended += rows.length
       }
@@ -511,13 +625,14 @@ object BucketedMaintenance {
     tables.foreach(t => spark.sessionState.catalog.invalidateCachedTable(
       org.apache.spark.sql.catalyst.TableIdentifier(t)))
 
-  /** `rows` as a ONE-partition local relation: a bucketed append of it
-    * writes at most one file per bucket, so appends do not multiply the
-    * table's file count by the session's parallelism. */
+  /** `rows` as a local relation of `partitions` partitions (one by
+    * default): a bucketed append of it writes at most that many files per
+    * bucket, so appends do not multiply the table's file count by the
+    * session's parallelism. */
   private[graft] def localRelation(spark: SparkSession, schema: StructType,
-                                   rows: Seq[Row]): DataFrame = {
+                                   rows: Seq[Row], partitions: Int = 1): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+    spark.createDataFrame(rows.asJava, schema).coalesce(partitions)
   }
 
   /** Drop `table` and its backing files (wherever a prior [[compact]] left

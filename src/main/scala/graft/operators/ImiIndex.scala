@@ -127,8 +127,8 @@ object ImiIndex {
   }
 
   /** Assign new vectors into the EXISTING half-models (no retrain) and
-    * append bucketed — the [[IvfIndex.assignInto]] analog (same chunking,
-    * presence check and guard), writing through the catalog so it follows
+    * append bucketed — the [[IvfIndex.assignInto]] analog (same chunking
+    * and its contract, presence check and guard), writing through the catalog so it follows
     * a compacted table's location. `buckets = 0` (the default) follows the
     * STORED table's bucket spec. */
   def assignInto(spark: SparkSession, tag: String,

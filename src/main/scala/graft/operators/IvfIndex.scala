@@ -186,9 +186,12 @@ object IvfIndex {
     * follows the STORED table's bucket spec — an explicit count that
     * disagrees with it would fail Spark's spec-mismatch check. `vec_id`
     * must be unique within the batch and absent from the index — a repeat
-    * or a stored id fails loudly before the write. A batch of more than
-    * [[BucketedMaintenance.MaxAppendRows]] vectors is appended as
-    * successive chunks of that size. */
+    * or a stored id fails loudly. A batch of at most
+    * [[BucketedMaintenance.MaxAppendRows]] vectors is one chunk, checked
+    * before the write. A larger batch is appended as successive chunks of
+    * that size, each checked before its own write, so a failure in a later
+    * chunk leaves the earlier ones appended (re-running the same call then
+    * fails on their ids; the [[LandingZone]] absorb skips them instead). */
   def assignInto(spark: SparkSession, tag: String,
                  newVecs: DataFrame, buckets: Int = 0): Unit = {
     assignChunks(spark, tag, newVecs, buckets, BucketedMaintenance.MaxAppendRows,

@@ -29,15 +29,22 @@ import org.apache.spark.sql.types.StructType
   *     absorbed docs in the index's sizes table (`corpus_id` — one row per
   *     absorbed doc) and skips them, so the replay is a no-op instead of
   *     the loud "already present" rejection a direct
-  *     [[ShingleIndex.append]] raises;
+  *     [[ShingleIndex.append]] raises. A crash BETWEEN the append's table
+  *     writes can leave a doc in `occ` but not in `sizes` (or the
+  *     reverse); the replay then fails loudly on it instead of skipping
+  *     or duplicating it, and the index needs a rebuild;
   *   - a LATE lower-attempt replay that retroactively changes a segment's
   *     winner after absorb surfaces as a "new" pending segment whose docs
   *     the same lookup drops — zero-dup holds under the manifest
   *     protocol's one documented race.
   *
-  * Scale shape: absorb cost is O(pending segments + touched index keys) —
-  * [[ShingleIndex.append]]'s contract — independent of both corpus size
-  * and log history; the lookups scan one column of an index table each.
+  * Scale shape: the append reads the pending docs in chunks of
+  * [[BucketedMaintenance.MaxAppendRows]], and each chunk's lookup scans
+  * the probed columns of the index tables once, so absorb cost is
+  * O(pending docs + chunks × index) — independent of log history, and a
+  * landing zone within one chunk (an arrival-sized cycle) scans the index
+  * once. The segments are read twice at most: once for the first chunk,
+  * once into a cache the later chunks read.
   * At 100 TB the cadence is: land continuously, absorb per maintenance
   * cycle, [[ShingleIndex.compact]] when file counts accrete,
   * [[ShingleIndex.rebuildIfNeeded]] when the overshoot census trips, and
@@ -88,8 +95,10 @@ object LandingZone {
     * and reports both counts, so nothing re-reads them: every read ends
     * before the consume-marking, which a concurrent low-grace retire waits
     * for. Consume-marking comes AFTER the append is durable: a crash
-    * anywhere earlier re-runs the pass and the presence lookup makes the
-    * re-run a no-op. */
+    * anywhere earlier re-runs the pass, and the presence lookup skips what
+    * the crashed pass appended, whole chunks included; a doc the crash
+    * left in only one of the shingle index's `occ` and `sizes` fails the
+    * re-run loudly (see the class doc). */
   private def absorbPending(spark: SparkSession, root: String, schema: StructType,
                             append: DataFrame => (Long, Long)): AbsorbReport = {
     val pending = pendingSegments(spark, root)

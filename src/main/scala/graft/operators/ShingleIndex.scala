@@ -290,9 +290,13 @@ object ShingleIndex {
     * skipped so the fp table stays distinct (a duplicated fp would fan out
     * every future probe's left join). `doc_id` must be unique within the
     * batch and absent from the index — a repeat or a stored id fails
-    * loudly before any table is written. A batch of more than
-    * [[BucketedMaintenance.MaxAppendRows]] docs is appended as successive
-    * chunks of that size. */
+    * loudly. A batch of at most [[BucketedMaintenance.MaxAppendRows]] docs
+    * is one chunk, checked before any table is written. A larger batch is
+    * appended as successive chunks of that size, each checked before its
+    * own writes: a failure in a later chunk leaves the earlier chunks
+    * appended, and re-running the same append then fails on their ids.
+    * The resumable path for large inputs is the [[LandingZone]] absorb,
+    * which skips ids the index already holds. */
   def append(spark: SparkSession, tag: String, path: String, newDocs: DataFrame,
              buckets: Int = 8,
              maxShingleDf: Int = Dedup.DefaultMaxShingleDf): Unit = {
@@ -300,6 +304,11 @@ object ShingleIndex {
       BucketedMaintenance.MaxAppendRows, dropPresent = false)
     ()
   }
+
+  /** Occurrence rows one task of an append's `occ` write sorts and writes
+    * (a full 50k-doc chunk carries ~2.6M at sf0.1): an arrival-sized
+    * append writes its delta in one task, so at most one file per bucket. */
+  private val OccRowsPerWriteTask = 200 * 1000
 
   private val OccDeltaSchema = StructType(Seq(
     StructField("corpus_id", LongType, nullable = false),
@@ -322,7 +331,10 @@ object ShingleIndex {
     IndexCanary.check(spark, occTable(tag), sizesTable(tag), fpTable(tag), satTable(tag))
     var read = 0L
     var appended = 0L
-    BucketedMaintenance.foreachChunk(newDocs.select(col("doc_id").cast("long"), col("text"),
+    // keys and fingerprint are computed by the collect's tasks, in
+    // parallel; the driver receives no text
+    BucketedMaintenance.foreachChunk(newDocs.select(col("doc_id").cast("long"),
+        udf((t: String) => Dedup.shingleKeys(t)).apply(col("text")).as("keys"),
         Dedup.canonicalFp(coalesce(col("text"), lit(""))).as("fp")), bound) { chunk =>
       read += chunk.length
       appended += appendChunk(spark, tag, path, chunk, buckets, maxShingleDf, dropPresent)
@@ -330,77 +342,96 @@ object ShingleIndex {
     (read, appended)
   }
 
-  /** One chunk of `(doc_id, text, fp)` rows held on the driver. Its four
-    * lookups (already-present ids, stored df and sat hits of the chunk's
-    * keys, stored fingerprints) are legs of ONE scan job
-    * ([[BucketedMaintenance.storedCounts]]); the cap, the four deltas and
-    * the presence check are driver work; each table is then written from a
-    * one-partition
-    * local relation under its OWN single-table
-    * [[BucketedMaintenance.guardedAppend]] with an exact survivorship probe.
+  /** One chunk of `(doc_id, keys, fp)` rows held on the driver. Its
+    * lookups (the chunk's ids in `sizes` and `occ`, stored df and sat hits
+    * of its keys, stored fingerprints) are legs of ONE scan job
+    * ([[BucketedMaintenance.storedCounts]]); the presence checks, the cap
+    * and the four deltas are driver work; each table is then written from
+    * a local relation (one partition, unless the `occ` delta passes
+    * [[OccRowsPerWriteTask]]) under its OWN single-table
+    * [[BucketedMaintenance.guardedAppend]] with an exact survivorship
+    * probe.
     *
     * Per-table guards, not one multi-table guard: survivorship of a raced
     * append can diverge per table, and only a per-table exact probe and a
     * per-table retry resolve it without duplication (a multi-table
     * file-count guard's "re-run it" remedy could duplicate the tables
-    * whose rows survived). The four appends need no cross-table atomicity
-    * — a crash mid-sequence leaves a partial state either way, and each
-    * COMPLETED call is durable. The presence check runs before the first
-    * write, so a rejected batch (e.g. a replay) leaves every table
-    * untouched; sat and fp deltas are disjoint from their tables by
-    * construction (stored keys and fingerprints are skipped). */
+    * whose rows survived). The four writes are not atomic together: a
+    * crash between them can leave a doc's `occ` rows without its `sizes`
+    * row, or the reverse. Such a doc fails every later append of it
+    * loudly, with `dropPresent` too — skipping it would lose the missing
+    * rows, re-appending it would duplicate the present ones — until a
+    * [[rebuild]]. The presence checks run before the first write, so a
+    * rejected chunk leaves every table untouched; sat and fp deltas are
+    * disjoint from their tables by construction (stored keys and
+    * fingerprints are skipped). */
   private def appendChunk(spark: SparkSession, tag: String, path: String, chunk: Array[Row],
                           buckets: Int, maxShingleDf: Int, dropPresent: Boolean): Long = {
     val (occT, sizesT, fpT, satT) = (occTable(tag), sizesTable(tag), fpTable(tag), satTable(tag))
     BucketedMaintenance.forgetListings(spark, Seq(occT, sizesT, fpT, satT))
-    val keysOf = chunk.map(r => r.getLong(0) -> Dedup.shingleKeys(r.getString(1))).toMap
-    val touched = keysOf.valuesIterator.flatten.toSet
-    val (Seq(present, storedDf, satHits), Seq(storedFps)) = BucketedMaintenance.storedCounts(spark,
-      Seq((sizesT, "corpus_id", keysOf.keys), (occT, "key", touched), (satT, "key", touched)),
-      Seq((fpT, "fp", chunk.map(_.getString(2)).toSeq)))
+    val keysOf = chunk.map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
+    val chunkIds = new BucketedMaintenance.LongSet(keysOf.keys)
+    val touched = new BucketedMaintenance.LongSet(keysOf.values.view.flatMap(_.iterator))
+    val (Seq(present, inOcc, storedDf, satHits), Seq(storedFps)) =
+      BucketedMaintenance.storedCounts(spark,
+        Seq((sizesT, "corpus_id", chunkIds), (occT, "corpus_id", chunkIds),
+          (occT, "key", touched), (satT, "key", touched)),
+        Seq((fpT, "fp", chunk.map(_.getString(2)).toSeq)))
+    // sizes holds exactly the doc_ids occ holds (a doc's row counts its
+    // occ rows); an id in only one of them is an append cut between its
+    // table writes
+    val torn = keysOf.keys.filter(id => present.contains(id) != inOcc.contains(id))
+    require(torn.isEmpty,
+      s"append into index '$tag': ${torn.size} batch doc_ids (e.g. ${torn.min}) are held " +
+        s"by only one of `$occT` and `$sizesT` — an earlier append of them stopped " +
+        "between its table writes. Rebuild the index before appending them again.")
     val fresh = BucketedMaintenance.freshRows(sizesT, chunk, present, dropPresent)
     // forward cap: a key's occurrences are admitted iff its stored df plus
     // the batch's df stays within the cap; rejected keys are saturated —
     // their true union df now exceeds the cap, which only a rebuild can
-    // reconcile — and recorded once for overshootCensus
-    val newDf = fresh.iterator.flatMap(r => keysOf(r.getLong(0))).toSeq
-      .groupMapReduce(identity)(_ => 1L)(_ + _)
-    val admitted = newDf.collect {
-      case (k, n) if storedDf.getOrElse(k, 0L) + n <= maxShingleDf => k
-    }.toSet
-    val newSat = (newDf.keySet -- admitted -- satHits.keySet).toSeq
+    // reconcile — and recorded once for overshootCensus. Per-key counts
+    // live in arrays indexed by the key's slot in `touched`.
+    val newDf = new Array[Long](touched.capacity)
+    fresh.foreach(r => keysOf(r.getLong(0)).foreach(k => newDf(touched.slotOf(k)) += 1))
+    def admitted(slot: Int) = storedDf.at(slot) + newDf(slot) <= maxShingleDf
+    val newSat = Iterator.range(0, newDf.length)
+      .filter(s => newDf(s) > 0 && !admitted(s) && satHits.at(s) == 0L)
+      .map(touched.keyAt).toSeq
     val occ = fresh.flatMap { r =>
-      val ks = keysOf(r.getLong(0)).filter(admitted)
+      val ks = keysOf(r.getLong(0)).filter(k => admitted(touched.slotOf(k)))
       Option.when(ks.nonEmpty)(r.getLong(0) -> ks)
     }
-    val newFp = fresh.map(_.getString(2)).distinct.filterNot(storedFps.contains)
+    val newFp = fresh.map(_.getString(2)).distinct.filterNot(storedFps.contains).toSeq
     val ids = occ.map(_._1).toSeq
-    def local(schema: StructType, rows: Iterable[Row]) =
-      BucketedMaintenance.localRelation(spark, schema, rows.toSeq)
+    def local(schema: StructType, rows: Iterable[Row], partitions: Int = 1) =
+      BucketedMaintenance.localRelation(spark, schema, rows.toSeq, partitions)
+    // the occ delta is the one large write: past OccRowsPerWriteTask
+    // occurrences it is sorted and written by more than one task
+    val occParts = math.min(spark.sparkContext.defaultParallelism,
+      1 + occ.iterator.map(_._2.length.toLong).sum / OccRowsPerWriteTask).toInt
     def guarded(table: String, probe: () => Boolean)(write: => Unit): () => Unit =
       () => BucketedMaintenance.guardedAppend(spark, Seq(table), rowsPresent = Some(probe))(write)
+    def holds(table: String, column: String, keys: Seq[Long]) =
+      BucketedMaintenance.holdsAll(spark, Seq((table, column, keys)))
     // four DIFFERENT tables, per-table guards — overlapped (a raced
     // external compact still resolves per table as in a sequential shape)
     Jobs.concurrently(Seq(
-      Option.when(newSat.nonEmpty)(guarded(satT,
-          BucketedMaintenance.holdsAll(spark, satT, "key", newSat)) {
+      Option.when(newSat.nonEmpty)(guarded(satT, holds(satT, "key", newSat)) {
         writeBucketed(local(KeySchema, newSat.map(Row(_))), satT, path, buckets, "key",
           SaveMode.Append)
       }),
-      Option.when(occ.nonEmpty)(guarded(occT,
-          BucketedMaintenance.holdsAll(spark, occT, "corpus_id", ids)) {
+      Option.when(occ.nonEmpty)(guarded(occT, holds(occT, "corpus_id", ids)) {
         writeBucketed(
-          local(OccDeltaSchema, occ.map { case (id, ks) => Row(id, ks.toSeq) })
+          local(OccDeltaSchema, occ.map { case (id, ks) => Row(id, ks.toSeq) }, occParts)
             .select(explode(col("keys")).as("key"), col("corpus_id")),
           occT, path, buckets, "key", SaveMode.Append)
       }),
-      Option.when(occ.nonEmpty)(guarded(sizesT,
-          BucketedMaintenance.holdsAll(spark, sizesT, "corpus_id", ids)) {
+      Option.when(occ.nonEmpty)(guarded(sizesT, holds(sizesT, "corpus_id", ids)) {
         writeBucketed(local(SizesSchema, occ.map { case (id, ks) => Row(id, ks.length.toLong) }),
           sizesT, path, buckets, "corpus_id", SaveMode.Append)
       }),
-      Option.when(newFp.nonEmpty)(guarded(fpT, () => BucketedMaintenance.storedCounts(spark,
-          Seq.empty, Seq((fpT, "fp", newFp.toSeq)))._2.head.size == newFp.length) {
+      Option.when(newFp.nonEmpty)(guarded(fpT,
+          BucketedMaintenance.holdsAll(spark, strings = Seq((fpT, "fp", newFp)))) {
         writeBucketed(local(FpSchema, newFp.map(Row(_))), fpT, path, buckets, "fp",
           SaveMode.Append)
       })).flatten)

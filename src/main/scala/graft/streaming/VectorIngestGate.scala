@@ -112,7 +112,10 @@ object VectorIngestGate {
     * [[PqTier]] only when candidate I/O is the measured bottleneck. */
   /** Most arrivals one [[gateBatch]] call takes: its verdicts (one row per
     * arrival) are collected to the driver, so a source feeding the gate
-    * must cap its micro-batch size. A larger batch fails loudly. */
+    * must cap its micro-batch size. A larger batch fails loudly. [[start]]
+    * appends a batch's kept vectors as ONE chunk of at most this many rows
+    * (~26 MB of 64-float embeddings), so the append either writes all of
+    * them or none. */
   val MaxBatchVectors: Int = 100 * 1000
 
   sealed trait ScoreTier
@@ -312,7 +315,12 @@ ORDER BY a.vec_id
             case Some(v) => spark.conf.set(pmKey, v)
             case None    => spark.conf.unset(pmKey)
           }
-          IvfIndex.assignInto(spark, indexTag, kept)
+          // one chunk, bounded by gateBatch's own bound: a replay after a
+          // failed append self-matches either every kept vector or none,
+          // never a partial prefix that the landing overwrite above would
+          // then drop from the landing zone
+          IvfIndex.assignChunks(spark, indexTag, kept, 0, MaxBatchVectors, dropPresent = false)
+          ()
         }
       }
       .start()

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{BucketedMaintenance, Dedup, IvfIndex, ShingleIndex, Similarity}
+import graft.operators.{BucketedMaintenance, Dedup, IvfIndex, LandingZone, ManifestLog,
+  ShingleIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -320,6 +321,51 @@ class MaintenanceGuardSpec extends AnyFunSuite {
         ShingleIndex.append(spark, stag, dir, fresh))
       assert(grown(0) > 0 && grown(1) == fresh.count(), s"occ/sizes rows added: $grown")
     } finally dropShingle(stag)
+  }
+
+  test("a doc held by only one of occ and sizes fails re-append and re-absorb loudly") {
+    // a crash between an append's table writes can commit a doc's occ rows
+    // without its sizes row, or the reverse. Skipping such a doc as present
+    // would lose the missing rows; re-appending it would duplicate the
+    // present ones (inflating its shared counts in every later probe). The
+    // direct append and the landing-zone absorb must both refuse it before
+    // any write, and the absorb must leave its segment pending.
+    val dir = Files.createTempDirectory("graft-torn").toString
+    val tag = "tornsh"
+    val (occT, sizesT) = (ShingleIndex.occTable(tag), ShingleIndex.sizesTable(tag))
+    val tables = Seq(occT, sizesT, ShingleIndex.fpTable(tag), ShingleIndex.satTable(tag))
+    def counts() = {
+      tables.foreach(spark.catalog.refreshTable)
+      tables.map(spark.table(_).count())
+    }
+    def doc(id: Long) = docs.filter(col("doc_id") === id).select("doc_id", "text")
+    try {
+      ShingleIndex.build(docs.filter(col("doc_id") % 5 =!= 0), dir, tag)
+      // doc 5: its occ rows committed, its sizes row not
+      Dedup.shingleRows(doc(5L))
+        .select(col("shingle").as("key"), col("doc_id").cast("long").as("corpus_id"))
+        .write.mode("append").format("parquet").bucketBy(8, "key").sortBy("key")
+        .saveAsTable(occT)
+      // doc 10: its sizes row committed, its occ rows not
+      spark.range(1).select(lit(10L).as("corpus_id"), lit(3L).as("nc"))
+        .write.mode("append").format("parquet").bucketBy(8, "corpus_id").sortBy("corpus_id")
+        .saveAsTable(sizesT)
+      val before = counts()
+      for (id <- Seq(5L, 10L)) {
+        val fresh = doc(id).unionByName(doc(id + 10L)) // with a doc the index lacks
+        val direct = intercept[IllegalArgumentException](
+          ShingleIndex.append(spark, tag, dir, fresh))
+        assert(direct.getMessage.contains("only one of"), direct.getMessage)
+        val root = Files.createTempDirectory("graft-torn-lz").toString
+        ManifestLog.append(fresh, root, "w0", 0L)
+        val absorb = intercept[IllegalArgumentException](
+          LandingZone.absorbIntoShingleIndex(spark, root, fresh.schema, tag, dir))
+        assert(absorb.getMessage.contains("only one of"), absorb.getMessage)
+        assert(LandingZone.pendingSegments(spark, root).nonEmpty,
+          "a failed absorb must leave its segment pending")
+        assert(counts() == before, s"doc $id: the rejected appends must not write anything")
+      }
+    } finally dropShingle(tag)
   }
 
   test("shingle append: per-table guards give duplicate-free absorbed-by-compact handling") {
