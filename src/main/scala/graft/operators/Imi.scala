@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Inverted multi-index (IMI) — the two-level quantizer the flat-IVF
@@ -204,10 +203,7 @@ object Imi {
         (q, nb, Similarity.dotP(vq, vn) / (nq * nn))
       }
       .toDF("query_id", "neighbor_id", "cos")
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(wTop)).filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 6).as("cos"))
-      .orderBy("query_id", "rk")
+    IvfIndex.topKScored(scored, k)
   }
 
   // --- Half-decorrelating rotation (the OPQ idea, cheap form) ----------

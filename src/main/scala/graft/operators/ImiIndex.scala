@@ -267,9 +267,11 @@ object ImiIndex {
             .map(cell => (id, cell, v, Similarity.normP(v)))
         }
         .toDF("query_id", "cell_id", "vq", "nq"))
-    // literal IN over the probed product cells → bucket pruning; the
-    // collect is ≤ queries × nprobe longs — probe metadata, not data
-    val probedCells = probes.select("cell_id").distinct().as[Long].collect().toSeq
+    // literal IN over the probed product cells → bucket pruning; one
+    // plain collect of ≤ queries × nprobe longs (probe metadata, not
+    // data), deduplicated on the driver — a `distinct()` in the plan would
+    // add an exchange job for the same list
+    val probedCells = probes.select("cell_id").collect().map(_.getLong(0)).distinct.toSeq
     val joined = spark.table(assignTable(tag))
       .filter(col("cell_id").isin(probedCells: _*))
       .join(probes, "cell_id")

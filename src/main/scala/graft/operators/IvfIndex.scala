@@ -287,17 +287,15 @@ object IvfIndex {
   def fileCount(spark: SparkSession, tag: String): Long =
     BucketedMaintenance.fileCount(spark, Seq(assignTable(tag)))
 
-  /** Per-JVM model cache keyed by the catalog entry's (location,
-    * createTime): a batch gate calls search + assignInto every
+  /** Driver-side centroid model, cached per JVM via
+    * [[BucketedMaintenance.cachedByVersion]], keyed by the catalog entry's
+    * (location, createTime): a batch gate calls search + assignInto every
     * micro-batch, and re-collecting an IMMUTABLE model table per call was
     * measured as a visible slice of the vector gate's batch wall
     * (StreamBench r7 attribution). The model only changes via
     * build/rebuild, which drop-and-recreate the table → new createTime,
     * even from another session (shared external catalog), so staleness
     * detection needs no file listing — one driver-side metadata read. */
-  /** Driver-side centroid model, cached per JVM via
-    * [[BucketedMaintenance.cachedByVersion]] (the model table only
-    * changes through build/rebuild, which recreate the catalog entry). */
   private def loadModel(spark: SparkSession, tag: String): Array[Array[Double]] =
     BucketedMaintenance.cachedByVersion(spark, modelTable(tag)) {
       val rows = spark.table(modelTable(tag))
@@ -372,29 +370,45 @@ object IvfIndex {
     * pinned constants explicitly. */
   def search(spark: SparkSession, tag: String, queries: DataFrame,
              nprobe: Int = 0, k: Int = 5, excludeSelf: Boolean = true): DataFrame = {
-    import spark.implicits._
     IndexCanary.check(spark, modelTable(tag), assignTable(tag))
     val cents = loadModel(spark, tag)
     val np = if (nprobe == 0) Similarity.nprobeFor(cents.length) else nprobe
+    val (_, scored) = floatStage(spark, tag, cents, queries, math.max(1, np), 0, excludeSelf)
+    topKScored(scored, k)
+  }
+
+  /** The float stage [[search]] and [[searchAdaptive]] share: probes of
+    * each query's first `n` ranked cells, the bucket-pruned scan of the
+    * probed cells joined to them, and the native cosine. `chunk > 0` tags
+    * each probe with its round, rank / `chunk` + 1, and carries it into
+    * the scored rows; `chunk = 0` leaves it out. Returns (the probes'
+    * (query_id, cid) pairs, scored(query_id, neighbor_id, cos[, round])). */
+  private def floatStage(spark: SparkSession, tag: String, cents: Array[Array[Double]],
+                         queries: DataFrame, n: Int, chunk: Int,
+                         excludeSelf: Boolean): (Array[(Long, Int)], DataFrame) = {
+    import spark.implicits._
     spark.catalog.refreshTable(assignTable(tag)) // see cross-session appends
     // checkpointed: the cell-ranking kernel feeds BOTH the probed-cells
     // collect below and the candidate join — without the barrier it runs
     // twice per search call (a measured slice of the streaming gate's
-    // batch wall; the relation is small — queries × nprobe rows)
+    // batch wall; the relation is small — queries × n rows)
+    val step = if (chunk > 0) chunk else n
+    val ranked = queries.select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (id, v) =>
+        rankCells(v, cents, n).zipWithIndex
+          .map { case (cid, r0) => (id, cid, v, Similarity.normP(v), r0 / step + 1) }
+      }
+      .toDF("query_id", "cid", "vq", "nq", "round")
     val probes = org.apache.spark.sql.graft.CheckpointShim.statsHonestLocalCheckpoint(
-      queries.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (id, v) =>
-          rankCells(v, cents, math.max(1, np))
-            .map(cid => (id, cid, v, Similarity.normP(v)))
-        }
-        .toDF("query_id", "cid", "vq", "nq"))
+      if (chunk > 0) ranked else ranked.drop("round"))
     // literal IN over the batch's probed cells → bucket pruning: the scan
     // opens only the probed cells' buckets (IvfIndexSpec pins
-    // SelectedBucketsCount < total)
-    val probedCells = cellsOf(probes)
+    // SelectedBucketsCount < total). One plain collect (≤ queries × n
+    // pairs — probe metadata, not data), deduplicated on the driver.
+    val pairs = probes.select("query_id", "cid").collect().map(r => (r.getLong(0), r.getInt(1)))
     val joined = spark.table(assignTable(tag))
-      .filter(col("cid").isin(probedCells: _*))
+      .filter(col("cid").isin(pairs.map(_._2).distinct.toSeq: _*))
       .join(probes, "cid")
     val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("query_id")) else joined
     // scoring is a native codegen expression over the in-place ArrayData
@@ -403,10 +417,11 @@ object IvfIndex {
     // round-trip, no per-pair norm recomputation
     graft.plans.DotFloat.ensureRegistered(spark)
     val scored = cand
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id"),
         (expr(s"${graft.plans.DotFloat.FuncName}(vq, embedding)")
-          / (col("nq") * col("nrm"))).as("cos"))
-    topKScored(scored, k)
+          / (col("nq") * col("nrm"))).as("cos")) ++
+        (if (chunk > 0) Seq(col("round")) else Nil): _*)
+    (pairs, scored)
   }
 
   /** [[search]] scored on the STORED int8 codes — [[Similarity.ivfSearchInt8]]
@@ -516,144 +531,89 @@ object IvfIndex {
     * this is the unlearned stability form). Fixed budgets overpay easy
     * queries and underpay hard ones: the r10 decade table shows the rule
     * budget flooring at 0.61–0.77 recall while a ≥0.95 consumer must pay
-    * a FIXED 4·rule everywhere. Here each query probes its ranked cells
-    * in CHUNKS of `chunk` (default: the [[Similarity.nprobeFor]] rule);
-    * after each chunk the query's running top-k (ids in rank order) is
-    * compared to the previous round's — an UNCHANGED top-k terminates the
-    * query, a changed one buys the next chunk, up to `maxChunks` chunks
-    * (default 4 → the 4·rule ceiling). Geometric cell bounds
-    * (Cauchy–Schwarz over centroid distance + cell radius) do not bite in
-    * high dimension, so stability IS the termination signal.
+    * a FIXED 4·rule everywhere. Here each query's ranked cells form
+    * rounds of `chunk` cells (default: the [[Similarity.nprobeFor]] rule),
+    * up to `maxChunks` rounds (default 4 → the 4·rule ceiling). After
+    * round r the query's prefix top-k (over every cell of rounds 1..r) is
+    * compared to round r−1's; `window` consecutive UNCHANGED neighbor-id
+    * sequences (rank order; a length change is a change) terminate the
+    * query, and it answers with that round's prefix top-k — else with the
+    * cap's. Geometric cell bounds (Cauchy–Schwarz over centroid distance
+    * + cell radius) do not bite in high dimension, so stability IS the
+    * termination signal. `onRound(r, n)` reports the n queries still
+    * active in round r.
     *
-    * Batch shape: one bucket-pruned scan per ROUND over only the
-    * still-active queries' next chunk (rank-ordered chunks are disjoint,
-    * and top-k(A ∪ B) = top-k(top-k(A) ∪ B), so the running top-k is
-    * exact over every cell probed so far). Driver state is
-    * metadata-sized: the active id set and per-round cell lists. With
+    * Batch shape: ONE bucket-pruned scan of every query's cells up to the
+    * cap, through [[search]]'s own stage with each probe tagged by its
+    * round, and one collect of the per-(query, round) top-k (≤ queries ×
+    * rounds × k rows, raw cos for order, Spark-rounded cos for output).
+    * The rule runs on the driver: a query's rounds probe disjoint cells,
+    * so merging its rounds' top-k in order is its exact prefix top-k
+    * (top-k(A ∪ B) = top-k(top-k(A) ∪ top-k(B))), ordered as the window
+    * orders (cos DESC with Spark's double ordering, neighbor_id ASC). The
+    * output is a local relation ordered by (query_id, rk). With
     * termination never firing the result is EXACTLY
-    * `search(nprobe = chunk·maxChunks)` (spec-pinned); stability can only
-    * stop a query EARLIER than the cap, so probed work only shrinks.
-    * Stability compares NEIGHBOR IDS (rank order), not raw scores — ulp
-    * differences must not flip a termination verdict between engines
-    * (the q_ivf_adaptive oracle unrolls the same rounds + rule).
+    * `search(nprobe = chunk·maxChunks)` (spec-pinned). Stability compares
+    * NEIGHBOR IDS, not raw scores — ulp differences must not flip a
+    * termination verdict between engines (the q_ivf_adaptive oracle,
+    * [[Similarity.ivfSearchAdaptiveSql]], applies the same rule).
     *
-    * DEMOTED FROM DEPLOYMENT GUIDANCE (r12) — appendix status. The
-    * measured record, in full (SCALING.md r11 + r12, exact truth):
-    * on HOMOGENEOUS query panels (r11, 2M and 20M) the policy is
-    * frontier-NEUTRAL on recall-per-probed-cell and 3–7× wall-worse; on
-    * the explicitly HETEROGENEOUS panel (r12 — 25 gate-band planted
-    * queries + 25 natural-band corpus queries in one batch, the
-    * operator's claimed regime) the reallocation is real (the easy half
-    * terminates after the stability window; round histograms in
-    * SCALING r12) and slightly frontier-POSITIVE — matching fixed
-    * 4·rule's recall at 3.82·rule mean budget, a ~4.5% candidate-I/O
-    * saving — but the wall is still 2–3.4× WORSE at every configuration,
-    * because each chunk round is a driver-synchronized job barrier that
-    * fixed budgets pay once. The verdict: at every scale measurable here
-    * a fixed budget at the same mean is faster, and the I/O saving is
-    * too small to buy the rounds. Use a fixed budget
-    * ([[search]]/[[searchInt8]]/[[searchPq]]). This operator remains
-    * correct (oracled: q_ivf_adaptive) and would only earn its rounds on
-    * a cluster whose candidate scans are so I/O-bound that a few percent
-    * of scan volume outweighs per-round scheduling — measure there
-    * before reaching for it. */
+    * Cost: one [[search]] at the cap plus one collect. The scan reads
+    * every query's cells up to the cap, even where the rule stops a query
+    * earlier, so the rule saves no candidate I/O. That I/O — ~4.5% at
+    * matched recall on SCALING.md r12's heterogeneous panel — is what the
+    * deleted per-round form saved by scanning only the still-active
+    * queries' next chunk, one driver-synchronized job barrier per round;
+    * r12 measured that form 2–3.4× slower in wall time than a fixed
+    * budget at every configuration, and those wall numbers belong to it,
+    * not to this form. Appendix status stands (SCALING.md r11 + r12):
+    * deploy a fixed budget ([[search]]/[[searchInt8]]/[[searchPq]]); this
+    * operator stays correct and oracled (q_ivf_adaptive). */
   def searchAdaptive(spark: SparkSession, tag: String, queries: DataFrame,
                      k: Int = 5, chunk: Int = 0, maxChunks: Int = 4,
                      excludeSelf: Boolean = true,
                      onRound: (Int, Long) => Unit = (_, _) => (),
                      window: Int = 1): DataFrame = {
-    import spark.implicits._
     IndexCanary.check(spark, modelTable(tag), assignTable(tag))
     val cents = loadModel(spark, tag)
     val step = if (chunk == 0) Similarity.nprobeFor(cents.length) else chunk
     val rounds = math.max(1, maxChunks)
-    spark.catalog.refreshTable(assignTable(tag))
-    graft.plans.DotFloat.ensureRegistered(spark)
-    val ck = org.apache.spark.sql.graft.CheckpointShim
-    // ranked cells for ALL rounds in one kernel pass (cells·dim per
-    // query), tagged with their 1-based round index
-    val rankedCells = ck.statsHonestLocalCheckpoint(
-      queries.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (id, v) =>
-          rankCells(v, cents, math.min(cents.length, step * rounds))
-            .zipWithIndex
-            .map { case (cid, r0) => (id, cid, r0 / step + 1) }
-        }
-        .toDF("query_id", "cid", "round"))
-    val qvecs = ck.statsHonestLocalCheckpoint(
-      queries.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .map { case (id, v) => (id, v, Similarity.normP(v)) }
-        .toDF("query_id", "vq", "nq"))
-    def scoreChunk(r: Int, activeIds: Option[Seq[Long]]): DataFrame = {
-      val base = rankedCells.filter(col("round") === r)
-      val probes = activeIds match {
-        case Some(ids) => base.filter(col("query_id").isin(ids: _*))
-        case None => base
-      }
-      val cells = cellsOf(probes)
-      if (cells.isEmpty)
-        return Seq.empty[(Long, Long, Double)]
-          .toDF("query_id", "neighbor_id", "cos")
-      val joined = spark.table(assignTable(tag))
-        .select("vec_id", "cid", "embedding", "nrm")
-        .filter(col("cid").isin(cells: _*))
-        .join(probes.select("query_id", "cid"), "cid")
-        .join(qvecs, "query_id")
-      val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("query_id"))
-        else joined
-      cand.select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (expr(s"${graft.plans.DotFloat.FuncName}(vq, embedding)")
-          / (col("nq") * col("nrm"))).as("cos"))
-    }
-    val wTop = Window.partitionBy("query_id")
+    val (pairs, scored) = floatStage(spark, tag, cents, queries,
+      math.min(cents.length, step * rounds), step, excludeSelf)
+    val wRound = Window.partitionBy("query_id", "round")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
-    def topK(scored: DataFrame): DataFrame =
-      scored.withColumn("rk", row_number().over(wTop)).filter(col("rk") <= k)
-        .select("query_id", "rk", "neighbor_id", "cos")
-    // round 1: every query. The id set derives from the already-
-    // materialized rankedCells checkpoint (every query has >= 1 ranked
-    // cell), not a second scan of the queries relation (r15 opt).
-    var prev = ck.statsHonestLocalCheckpoint(topK(scoreChunk(1, None)))
-    val allIds = rankedCells.select(col("query_id")).distinct()
-      .as[Long].collect().toSeq
-    onRound(1, allIds.size.toLong)
-    // stability streak per query: `window` CONSECUTIVE unchanged rounds
-    // terminate (window 1 = the oracle-pinned default; a higher window
-    // demands stronger evidence before a query stops buying)
-    val win = math.max(1, window)
-    val streak = scala.collection.mutable.HashMap.empty[Long, Int]
-    allIds.foreach(q => streak(q) = 0)
-    var active: Seq[Long] = allIds
-    val finished = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var r = 2
-    while (r <= rounds && active.nonEmpty) {
-      onRound(r, active.size.toLong)
-      val next = ck.statsHonestLocalCheckpoint(topK(
-        prev.select("query_id", "neighbor_id", "cos")
-          .unionAll(scoreChunk(r, Some(active)))))
-      // stability verdict: neighbor-id sequence per query, null-safe full
-      // join on (query_id, rk) — a length change is a change too
-      val changed = next.select(col("query_id"), col("rk"), col("neighbor_id"))
-        .join(prev.select(col("query_id"), col("rk"),
-          col("neighbor_id").as("p_nid")), Seq("query_id", "rk"), "full")
-        .filter(!(col("neighbor_id") <=> col("p_nid")))
-        .select("query_id").distinct().as[Long].collect().toSet
-      active.foreach(q => streak(q) = if (changed(q)) 0 else streak(q) + 1)
-      val (done, cont) = active.partition(q => streak(q) >= win)
-      // stable queries keep their (unchanged ≡ prev) rows and stop buying
-      finished += next.filter(col("query_id").isin(done: _*))
-      active = cont
-      prev = ck.statsHonestLocalCheckpoint(
-        next.filter(col("query_id").isin(cont: _*)))
-      r += 1
+    // (neighbor_id, raw cos, output cos) per (query, round)
+    val tops = scored.withColumn("rw", row_number().over(wRound)).filter(col("rw") <= k)
+      .select(col("query_id"), col("round"), col("neighbor_id"), col("cos"),
+        round(col("cos"), 6))
+      .collect()
+      .groupBy(r => (r.getLong(0), r.getInt(1)))
+      .map { case (key, rs) => key -> rs.map(r => (r.getLong(2), r.getDouble(3), r.getDouble(4))) }
+    val order: Ordering[(Long, Double, Double)] = (a, b) => {
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(b._2, a._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
     }
-    finished += prev
-    finished.reduce(_ unionAll _)
-      .select(col("query_id"), col("rk"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("query_id", "rk")
+    val win = math.max(1, window)
+    // per query: the prefix top-k of its terminal round
+    val answers = pairs.map(_._1).distinct.sorted.map { q =>
+      var prefix = tops.getOrElse((q, 1), Array.empty).sorted(order)
+      var r = 1
+      var streak = 0
+      while (r < rounds && streak < win) {
+        r += 1
+        val next = (prefix ++ tops.getOrElse((q, r), Array.empty)).sorted(order).take(k)
+        streak = if (next.map(_._1).sameElements(prefix.map(_._1))) streak + 1 else 0
+        prefix = next
+      }
+      (q, r, prefix)
+    }
+    onRound(1, answers.length.toLong)
+    (2 to rounds).iterator.map(r => r -> answers.count(_._2 >= r))
+      .takeWhile(_._2 > 0).foreach { case (r, n) => onRound(r, n.toLong) }
+    import spark.implicits._
+    answers.toSeq.flatMap { case (q, _, prefix) =>
+      prefix.toSeq.zipWithIndex.map { case ((nid, _, out), i) => (q, i + 1, nid, out) }
+    }.toDF("query_id", "rk", "neighbor_id", "cos")
   }
 
   /** [[search]] scored by PQ/ADC lookup — the 8-byte candidate tier

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`): brute-force
@@ -830,10 +829,7 @@ FROM scored WHERE cos >= $threshold ORDER BY id_a, id_b
       .as[(Long, Long, Array[Float], Array[Float], Double, Double)]
       .map { case (q, nb, vq, vn, nq, nn) => (q, nb, dotP(vq, vn) / (nq * nn)) }
       .toDF("query_id", "neighbor_id", "cos")
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(wTop)).filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 6).as("cos"))
-      .orderBy("query_id", "rk")
+    IvfIndex.topKScored(scored, k)
   }
 
   /** Candidate (query_id, neighbor_id) pairs from multi-probe IVF cell
@@ -928,10 +924,7 @@ FROM scored WHERE cos >= $threshold ORDER BY id_a, id_b
         (q, nb, if (na == 0 || nbn == 0) 0.0 else d.toDouble / (na * nbn))
       }
       .toDF("query_id", "neighbor_id", "cos")
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(wTop)).filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 6).as("cos"))
-      .orderBy("query_id", "rk")
+    IvfIndex.topKScored(scored, k)
   }
 
   /** The Lloyd-training CTE chain, unrolled for `iters` rounds — shared by

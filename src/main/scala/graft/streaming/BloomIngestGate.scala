@@ -88,23 +88,15 @@ object BloomIngestGate {
         .drop("landed_before")
     else gated).persist()
     try {
-      val pmKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(pmKey)
-      spark.conf.set(pmKey, "dynamic")
-      try {
-        val admitted = verdicts.filter(col("admitted")).select("doc_id", "text")
-        admitted.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(landingDir)
-        BloomDedup.absorb(spark, tag, admitted)
-        verdicts.select("doc_id", "bloom_dup", "dup_of", "admitted")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(receiptsDir)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(pmKey, v)
-          case None    => spark.conf.unset(pmKey)
-        }
-      }
+      val admitted = verdicts.filter(col("admitted")).select("doc_id", "text")
+      admitted.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(landingDir)
+      BloomDedup.absorb(spark, tag, admitted)
+      verdicts.select("doc_id", "bloom_dup", "dup_of", "admitted")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(receiptsDir)
     } finally verdicts.unpersist()
   }
 

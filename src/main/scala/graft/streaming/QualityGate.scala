@@ -58,24 +58,16 @@ object QualityGate {
                                    model: DataFrame, totals: DataFrame, dim: Int,
                                    threshold: Double, landingDir: String,
                                    receiptsDir: String): Unit = {
-    val spark = batch.sparkSession
     val (receipts, admitted) = gateBatch(batch, model, totals, dim, threshold)
     receipts.persist()
-    val pmKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(pmKey)
-    spark.conf.set(pmKey, "dynamic")
     try {
       receipts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(receiptsDir)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(receiptsDir)
       admitted.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(landingDir)
-    } finally {
-      receipts.unpersist()
-      prev match {
-        case Some(v) => spark.conf.set(pmKey, v)
-        case None    => spark.conf.unset(pmKey)
-      }
-    }
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(landingDir)
+    } finally receipts.unpersist()
   }
 
   /** Start the gate. `stream` must carry (doc_id: long, text: string);

@@ -303,18 +303,12 @@ ORDER BY a.vec_id
           // arrivals self-matched and kept empty; an empty dynamic
           // overwrite touches no partitions, so the first attempt's
           // landing rows — which ARE in the index — survive.)
-          val pmKey = "spark.sql.sources.partitionOverwriteMode"
-          val prev = spark.conf.getOption(pmKey)
-          spark.conf.set(pmKey, "dynamic")
-          try {
-            receipts.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").partitionBy("batch_id").parquet(receiptsDir)
-            kept.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").partitionBy("batch_id").parquet(landingDir)
-          } finally prev match {
-            case Some(v) => spark.conf.set(pmKey, v)
-            case None    => spark.conf.unset(pmKey)
-          }
+          receipts.withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(receiptsDir)
+          kept.withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(landingDir)
           // one chunk, bounded by gateBatch's own bound: a replay after a
           // failed append self-matches either every kept vector or none,
           // never a partial prefix that the landing overwrite above would

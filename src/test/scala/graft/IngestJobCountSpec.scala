@@ -1,18 +1,14 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
+import graft.JobCount.{jobsOf, ran}
 import graft.operators.{IvfIndex, LandingZone, ManifestLog, ShingleIndex, Similarity}
 import graft.streaming.{IngestGate, VectorIngestGate}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** Spark job counts of the two ingest gates on one 100-arrival local
   * batch, with both outputs consumed the way a caller does (receipts and
@@ -33,33 +29,6 @@ class IngestJobCountSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val dir = "/root/testdata/sf0.001"
-
-  /** The jobs started while running `f`, counted through a job group so
-    * that no other work in the JVM is counted: one entry per job, its
-    * result stage's name (the call site, e.g. "collect at X.scala:12"). */
-  private def jobsOf(label: String)(f: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"ingest-job-count-$label"
-    val jobs = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.sortBy(_.stageId).lastOption.fold("(no stages)")(_.name))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, label)
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.asScala.toSeq
-  }
-
-  /** A pin's failure message: the count and every counted job's stage. */
-  private def ran(what: String, jobs: Seq[String]): String =
-    s"$what ran ${jobs.length} jobs:\n  " + jobs.mkString("\n  ")
 
   test("gateBatchIndexed with a non-empty landing zone: 100 arrivals in at most 8 jobs") {
     import spark.implicits._
@@ -87,7 +56,7 @@ class IngestJobCountSpec extends AnyFunSuite {
       val landing = spark.read.schema("doc_id long, text string").parquet(landingDir)
       val batch = arrivals.toDF("doc_id", "text")
       var receipts = Array.empty[org.apache.spark.sql.Row]
-      val n = jobsOf("docs") {
+      val n = jobsOf(spark, "ingest-job-count-docs") {
         val (r, k) = IngestGate.gateBatchIndexed("ijc", Some(landing), batch, 0.5)
         receipts = r.collect()
         k.collect()
@@ -111,7 +80,7 @@ class IngestJobCountSpec extends AnyFunSuite {
     try {
       IvfIndex.build(emb, s"$root/index", "vjc", nCentroids = 8, seed = Similarity.ResidueSeed)
       var receipts = Array.empty[org.apache.spark.sql.Row]
-      val n = jobsOf("vectors") {
+      val n = jobsOf(spark, "ingest-job-count-vectors") {
         val (r, k) = VectorIngestGate.gateBatch("vjc", arrivals, 0.999, nprobe = 0)
         receipts = r.collect()
         k.collect()
@@ -149,7 +118,7 @@ class IngestJobCountSpec extends AnyFunSuite {
           s"$root/land_vecs", "w0", b.toLong)
       }
       var reports = Seq.empty[LandingZone.AbsorbReport]
-      val n = jobsOf("absorb") {
+      val n = jobsOf(spark, "ingest-job-count-absorb") {
         reports = Seq(
           LandingZone.absorbIntoShingleIndex(spark, s"$root/land_docs", docSchema, "ajc", s"$root/sh"),
           LandingZone.absorbIntoIvfIndex(spark, s"$root/land_vecs", vecSchema, "ajv"))
